@@ -48,6 +48,7 @@ from mvrepair.operators.repair import (
 )
 from mvrepair.plans import mv_pair as P
 from mvrepair.sources import load_table
+from mvrepair.tuning import SHUFFLE_PARTITIONS, conf_scope
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -2996,37 +2997,19 @@ FROM scored WHERE sim >= 0.9"""
 # streaming family (Structured Streaming; availableNow over the same parquet)
 # ---------------------------------------------------------------------------
 
-from contextlib import contextmanager
+# Streaming state partitions.  A stateful query pins one state store
+# per shuffle partition for the life of the run, and the count is locked
+# into the checkpoint at query start (a trivial availableNow drain costs
+# ~3-4.7 s at 32 partitions, ~1.5 s at 8, ~0.9 s at 1 — per-partition
+# state-store setup/commit, not compute).  BOUNDED state (sketch grids,
+# HLL registers, PCA cells, histogram buckets, calendar windows) runs at
+# 4: the partial aggregation collapses map-side, so the reduce side is
+# O(state) at any input volume.  KEYED state (per-key latest, sessions,
+# dedup digests, stream-stream join buffers) grows with the key space:
+# 8 locally, scaled with key cardinality in production.
+_STATE_BOUNDED = {SHUFFLE_PARTITIONS: "4"}
+_STATE_KEYED = {SHUFFLE_PARTITIONS: "8"}
 
-
-@contextmanager
-def _state_partitions(spark: SparkSession, n: int):
-    """Scope ``spark.sql.shuffle.partitions`` down for a streaming query.
-
-    A stateful query pins one state store + Python state worker per shuffle
-    partition for the life of the run; at fixture scale (≤5k groups) 32 of
-    them are pure constant overhead.  The partition count is locked into
-    the checkpoint at query start, so this is a per-stream sizing decision,
-    not an engine default — a 100 TB stream sets it high once and keeps it.
-
-    r11 optimization round sizing rule (measured: a trivial availableNow
-    drain costs ~3-4.7 s at 32 state partitions, ~1.5 s at 8, ~0.9 s at
-    1 — the floor is per-partition state-store setup/commit I/O, not
-    compute): streams whose state is a BOUNDED artifact (sketch grids,
-    HLL registers, PCA cells, histogram buckets, calendar-domain
-    windows) run at 4 — their reduce side is O(state) at ANY input
-    volume because the partial aggregation collapses map-side, so few
-    partitions is the honest choice at 100 TB too; streams whose state
-    grows with the key space (per-key latest, sessions, exact-dedup
-    digests, stream-stream join buffers) keep 8 locally and scale this
-    knob with key cardinality in production.
-    """
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 def q_events_hourly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of events_hourly: readStream → watermark → window agg.
@@ -3038,7 +3021,7 @@ def q_events_hourly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mvrepair.streaming.incremental import streaming_events_hourly
 
     sdf = streaming_events_hourly(load_stream(spark, sf_dir, "events"))
-    with _state_partitions(spark, 4):
+    with conf_scope(spark, _STATE_BOUNDED):
         query = (
             sdf.writeStream.format("memory")
             .queryName("__events_hourly_stream")
@@ -3065,7 +3048,7 @@ def q_mv_merkle_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         _MERKLE_VALS,
         MERKLE_DEPTH,
     )
-    with _state_partitions(spark, 4):
+    with conf_scope(spark, _STATE_BOUNDED):
         query = (
             sdf.writeStream.format("memory")
             .queryName("__mv_merkle_stream")
@@ -3097,7 +3080,7 @@ def q_events_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         ["event_type"],
     )
-    with _state_partitions(spark, 4):
+    with conf_scope(spark, _STATE_BOUNDED):
         query = (
             sdf.writeStream.format("memory")
             .queryName("__events_hll_stream")
@@ -3127,7 +3110,7 @@ def q_events_sliding_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     sdf = streaming_events_sliding(
         load_stream(spark, sf_dir, "events"), slide_minutes=SLIDE_MIN
     )
-    with _state_partitions(spark, 4):
+    with conf_scope(spark, _STATE_BOUNDED):
         query = (
             sdf.writeStream.format("memory")
             .queryName("__events_sliding_stream")
@@ -3157,7 +3140,7 @@ def q_view_purchase_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type") == "purchase"
     )
     sdf = streaming_view_purchase_join(views, purchases)
-    with _state_partitions(spark, 8):
+    with conf_scope(spark, _STATE_KEYED):
         query = (
             sdf.writeStream.format("memory")
             .queryName("__view_purchase_stream")
@@ -3202,7 +3185,7 @@ def q_dedup_exact_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("r")
     ).select("r.doc_id", "r.text")
-    with _state_partitions(spark, 8):
+    with conf_scope(spark, _STATE_KEYED):
         query = (
             streaming_dedup_native(docs)
             .writeStream.format("memory")
@@ -3493,7 +3476,7 @@ def q_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(tokenize(F.col("text"))).alias("token")
     )
     sdf = streaming_cms_counters(stoks, "token", w=CMS_W, d=CMS_D)
-    with _state_partitions(spark, 4):
+    with conf_scope(spark, _STATE_BOUNDED):
         query = (
             sdf.writeStream.format("memory")
             .queryName("__cms_stream")
@@ -4149,7 +4132,7 @@ def q_pca_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         64,
     )
-    with _state_partitions(spark, 4):
+    with conf_scope(spark, _STATE_BOUNDED):
         query = (
             sdf.writeStream.format("memory")
             .queryName("__pca_stream")
@@ -4474,7 +4457,7 @@ def q_events_latest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mvrepair.streaming.incremental import streaming_latest_per_key
 
     ev = load_stream(spark, sf_dir, "events")
-    with _state_partitions(spark, 8):
+    with conf_scope(spark, _STATE_KEYED):
         query = (
             streaming_latest_per_key(ev)
             .writeStream.format("memory")
@@ -4505,7 +4488,7 @@ def q_sessions_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mvrepair.sources.parquet import load_stream
 
     ev = load_stream(spark, sf_dir, "events").withWatermark("ts", "0 seconds")
-    with _state_partitions(spark, 8):
+    with conf_scope(spark, _STATE_KEYED):
         query = (
             sessionize(ev, "user_id", "ts", gap="30 minutes", value_col="value")
             .writeStream.format("memory")
@@ -5365,7 +5348,7 @@ def q_price_hist_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents"),
     )
     sdf = SK.equiwidth_hist(scents, "cents", ["flag"], HIST_WIDTH_CENTS)
-    with _state_partitions(spark, 4):
+    with conf_scope(spark, _STATE_BOUNDED):
         query = (
             sdf.writeStream.format("memory")
             .queryName("__hist_stream")
@@ -7313,7 +7296,7 @@ def q_events_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()
     sev = load_stream(spark, sf_dir, "events").select("event_type", "ts")
     sdf = drift_counts(sev, "event_type", "ts", int(row["mid"]))
-    with _state_partitions(spark, 4):
+    with conf_scope(spark, _STATE_BOUNDED):
         query = (
             sdf.writeStream.format("memory")
             .queryName("__drift_stream")
@@ -7681,6 +7664,8 @@ def q_events_tokenrange(spark: SparkSession, sf_dir: str) -> DataFrame:
     src/main/java/mvsync/MvSync.java per-split RDD scan)."""
     from mvrepair.sources.tokenrange import TokenRangeDataSource
 
+    # session-global by design: pushdown is decided when the lazy plan is
+    # optimized at action time, after this function returns
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(TokenRangeDataSource)
     df = (
@@ -7762,7 +7747,7 @@ def q_events_tokenrange_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and terminates — rowcount 1 vs 4 against the oracle.
     import time as _time
 
-    with _state_partitions(spark, 4):
+    with conf_scope(spark, _STATE_BOUNDED):
         query = (
             agg.writeStream.format("memory")
             .queryName("__events_tokenrange_stream")

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from mvrepair.functions import stable_hash64
 from mvrepair.operators.text import tokenize
+from mvrepair.tuning import CACHED_PLAN_AQE, conf_scope, sized_loop
 
 # observe() metric names must be unique per query; module counter keeps
 # repeated LSH stages in one plan distinct (deterministic, driver-side).
@@ -552,36 +553,29 @@ def ngram_jaccard_pairs(
     # (Spark keeps a cached plan's output partitioning stable by default).
     # The materializing count() below IS the pipeline's one heavy action —
     # without AQE it loses runtime partition coalescing and skew handling
-    # (measured at sf0.1: 25.6 s restricted vs 11.7 s adaptive).  Scope the
-    # conf to this operator and restore on exit.
+    # (measured at sf0.1: 25.6 s restricted vs 11.7 s adaptive).
     spark = df.sparkSession
-    _AQE_CACHE_KEY = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    old = spark.conf.get(_AQE_CACHE_KEY, None)
-    spark.conf.set(_AQE_CACHE_KEY, "true")
-    owned = shingle_tokens(df, text_col, id_col, n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    try:
-        cands = minhash_candidate_pairs(
-            df, text_col, id_col, n, toks=owned, max_bucket=max_bucket
+    with conf_scope(spark, {CACHED_PLAN_AQE: "true"}):
+        owned = shingle_tokens(df, text_col, id_col, n).persist(
+            StorageLevel.MEMORY_AND_DISK
         )
-        out = jaccard_verify(
-            cands, df, text_col, id_col, threshold, n, toks=owned
-        ).persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            out.count()  # materialize pairs while the shingle cache is hot
-            from mvrepair import cache as _cache
+            cands = minhash_candidate_pairs(
+                df, text_col, id_col, n, toks=owned, max_bucket=max_bucket
+            )
+            out = jaccard_verify(
+                cands, df, text_col, id_col, threshold, n, toks=owned
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+            try:
+                out.count()  # materialize pairs while the shingle cache is hot
+                from mvrepair import cache as _cache
 
-            _cache.adopt(out)
-        except Exception:
-            out.unpersist()
-            raise
-    finally:
-        owned.unpersist()
-        if old is None:
-            spark.conf.unset(_AQE_CACHE_KEY)
-        else:
-            spark.conf.set(_AQE_CACHE_KEY, old)
+                _cache.adopt(out)
+            except Exception:
+                out.unpersist()
+                raise
+        finally:
+            owned.unpersist()
     return out
 
 
@@ -755,116 +749,110 @@ def connected_components(
             if st.getPath().getName().startswith("rdd-")
         }
 
-    from mvrepair.tuning import sized_loop
-
     n_pairs = pairs.count()  # sizes the loop (callers pass pairs cached)
-    # r12 (r11 ADVICE): the context enters INSIDE the try — an
-    # AnalysisException while building edges/labels used to leak
-    # AQE-disabled + a static shuffle-partition count into the shared
-    # session for every later query.  edges/labels start None so the
-    # finally's unpersist is always bound.
-    _ctx = sized_loop(spark, 2 * n_pairs)
+    # edges/labels start None so the finally's unpersist is always bound
     edges = labels = None
     try:
-        _ctx.__enter__()
-        # no distinct(): duplicate edges are harmless under
-        # min-aggregation and deduping them would cost an extra shuffle
-        # per build.  dst-partitioned: the per-round neighbor join keys
-        # on dst, so the |E|-sized cache never re-exchanges (labels,
-        # |V|-sized, aligns to it)
-        edges = (
-            pairs.select(
-                F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-            )
-            .unionByName(
+        with sized_loop(spark, 2 * n_pairs):
+            # no distinct(): duplicate edges are harmless under
+            # min-aggregation and deduping them would cost an extra shuffle
+            # per build.  dst-partitioned: the per-round neighbor join keys
+            # on dst, so the |E|-sized cache never re-exchanges (labels,
+            # |V|-sized, aligns to it)
+            edges = (
                 pairs.select(
-                    F.col("id_b").alias("src"), F.col("id_a").alias("dst")
+                    F.col("id_a").alias("src"), F.col("id_b").alias("dst")
                 )
+                .unionByName(
+                    pairs.select(
+                        F.col("id_b").alias("src"), F.col("id_a").alias("dst")
+                    )
+                )
+                .repartition("dst")
+                .persist(StorageLevel.MEMORY_AND_DISK)
             )
-            .repartition("dst")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        labels = nodes.select(
-            F.col(id_col).alias("id"), F.col(id_col).alias("lbl")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        from pyspark.sql import Observation
+            labels = nodes.select(
+                F.col(id_col).alias("id"), F.col(id_col).alias("lbl")
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+            from pyspark.sql import Observation
 
-        converged = False
-        for it in range(max_iters):
-            neighbor_min = (
-                edges.join(
-                    labels.withColumnRenamed("id", "dst").withColumnRenamed(
-                        "lbl", "nlbl"
-                    ),
-                    on="dst",
+            converged = False
+            for it in range(max_iters):
+                neighbor_min = (
+                    edges.join(
+                        labels.withColumnRenamed(
+                            "id", "dst"
+                        ).withColumnRenamed("lbl", "nlbl"),
+                        on="dst",
+                    )
+                    .groupBy(F.col("src").alias("id"))
+                    .agg(F.min("nlbl").alias("nmin"))
                 )
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.min("nlbl").alias("nmin"))
-            )
-            # the changed-count rides the materializing action via observe
-            # — one job per round, no second labels-vs-labels join
-            obs = Observation(f"cc_round_{_obs_name('cc')}_{it}")
-            candidate = (
-                labels.join(neighbor_min, on="id", how="left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("lbl"), F.coalesce(F.col("nmin"), F.col("lbl"))
-                    ).alias("lbl"),
-                    (F.coalesce(F.col("nmin"), F.col("lbl"))
-                     < F.col("lbl")).cast("long").alias("__chg"),
+                # the changed-count rides the materializing action via observe
+                # — one job per round, no second labels-vs-labels join
+                obs = Observation(f"cc_round_{_obs_name('cc')}_{it}")
+                candidate = (
+                    labels.join(neighbor_min, on="id", how="left")
+                    .select(
+                        "id",
+                        F.least(
+                            F.col("lbl"),
+                            F.coalesce(F.col("nmin"), F.col("lbl")),
+                        ).alias("lbl"),
+                        (F.coalesce(F.col("nmin"), F.col("lbl"))
+                         < F.col("lbl")).cast("long").alias("__chg"),
+                    )
+                    .observe(obs, F.sum("__chg").alias("changed"))
+                    .drop("__chg")
                 )
-                .observe(obs, F.sum("__chg").alias("changed"))
-                .drop("__chg")
+                # LINEAGE TRUNCATION, not just caching: ``labels`` appears
+                # TWICE in each round's plan (its own join side and inside
+                # neighbor_min), so an un-truncated logical plan DOUBLES per
+                # round — 2^rounds nodes, analyzer OOM by round ~10 even on a
+                # 10-row graph.  localCheckpoint materializes the round (the
+                # observe metrics ride this job) and re-roots the plan at the
+                # stored partitions — the standard iterative-graph pattern
+                # (use checkpoint() with a checkpoint dir for fault tolerance
+                # on a real cluster).
+                if checkpoint_dir is None:
+                    new_labels = candidate.localCheckpoint(eager=True)
+                else:
+                    before = _ckpt_entries()
+                    new_labels = candidate.checkpoint(eager=True)
+                    this_round = _ckpt_entries() - before
+                    # round it-1's files are dead once round it materialized;
+                    # Spark only auto-cleans reliable checkpoints at context
+                    # shutdown, so a deep loop must clean as it goes
+                    for p in prev_entries:
+                        fs.delete(jvm.org.apache.hadoop.fs.Path(p), True)
+                    prev_entries = this_round
+                if it == 0:
+                    # the initial labels frame is the only cache-manager entry
+                    # in the loop; checkpointed rounds are executor-local RDD
+                    # blocks, NOT cache entries — DataFrame.unpersist() on
+                    # them is a no-op (round-4 ADVICE).  Dropping the Python
+                    # reference (the reassignment below) lets Spark's
+                    # ContextCleaner reclaim each round's blocks once the
+                    # driver GCs the old frame; for long loops on a real
+                    # cluster prefer checkpoint(dir), which also restores
+                    # fault tolerance (the docstring's variant note).
+                    labels.unpersist()
+                labels = new_labels
+                if int(obs.get["changed"] or 0) == 0:
+                    converged = True
+                    break
+            if not converged:
+                # a non-fixpoint labeling is silently WRONG (some nodes still
+                # carry a non-minimal label) — fail loudly instead
+                raise RuntimeError(
+                    f"connected_components did not converge in {max_iters} "
+                    f"rounds; the graph has a component with diameter > "
+                    f"{max_iters} — raise max_iters"
+                )
+            # already materialized by the final checkpoint; plain projection
+            return labels.select(
+                F.col("id").alias(id_col), F.col("lbl").alias("cluster_id")
             )
-            # LINEAGE TRUNCATION, not just caching: ``labels`` appears
-            # TWICE in each round's plan (its own join side and inside
-            # neighbor_min), so an un-truncated logical plan DOUBLES per
-            # round — 2^rounds nodes, analyzer OOM by round ~10 even on a
-            # 10-row graph.  localCheckpoint materializes the round (the
-            # observe metrics ride this job) and re-roots the plan at the
-            # stored partitions — the standard iterative-graph pattern
-            # (use checkpoint() with a checkpoint dir for fault tolerance
-            # on a real cluster).
-            if checkpoint_dir is None:
-                new_labels = candidate.localCheckpoint(eager=True)
-            else:
-                before = _ckpt_entries()
-                new_labels = candidate.checkpoint(eager=True)
-                this_round = _ckpt_entries() - before
-                # round it-1's files are dead once round it materialized;
-                # Spark only auto-cleans reliable checkpoints at context
-                # shutdown, so a deep loop must clean as it goes
-                for p in prev_entries:
-                    fs.delete(jvm.org.apache.hadoop.fs.Path(p), True)
-                prev_entries = this_round
-            if it == 0:
-                # the initial labels frame is the only cache-manager entry
-                # in the loop; checkpointed rounds are executor-local RDD
-                # blocks, NOT cache entries — DataFrame.unpersist() on
-                # them is a no-op (round-4 ADVICE).  Dropping the Python
-                # reference (the reassignment below) lets Spark's
-                # ContextCleaner reclaim each round's blocks once the
-                # driver GCs the old frame; for long loops on a real
-                # cluster prefer checkpoint(dir), which also restores
-                # fault tolerance (the docstring's variant note).
-                labels.unpersist()
-            labels = new_labels
-            if int(obs.get["changed"] or 0) == 0:
-                converged = True
-                break
-        if not converged:
-            # a non-fixpoint labeling is silently WRONG (some nodes still
-            # carry a non-minimal label) — fail loudly instead
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iters} "
-                f"rounds; the graph has a component with diameter > "
-                f"{max_iters} — raise max_iters"
-            )
-        # already materialized by the final checkpoint; plain projection
-        return labels.select(
-            F.col("id").alias(id_col), F.col("lbl").alias("cluster_id")
-        )
     finally:
         if edges is not None:
             edges.unpersist()
@@ -873,7 +861,6 @@ def connected_components(
         # this is a harmless no-op (see the round-0 comment above)
         if labels is not None:
             labels.unpersist()
-        _ctx.__exit__(None, None, None)
         # undo the global checkpoint-dir mutation (possible only when a
         # prior dir existed — Spark has no unset; the uuid-subdir scheme
         # keeps a lingering dir harmless either way)
@@ -997,44 +984,38 @@ def contamination_check(
     ``ngram_jaccard_pairs`` applies.
     """
     spark = docs.sparkSession
-    _AQE_CACHE_KEY = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    old = spark.conf.get(_AQE_CACHE_KEY, None)
-    spark.conf.set(_AQE_CACHE_KEY, "true")
-    toks_all = docs.select(
-        F.col(id_col),
-        F.col(split_col),
-        F.array_distinct(shingles(F.col(text_col), n)).alias("__toks"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        out = containment_pairs(
-            None,
-            None,
-            text_col,
-            id_col,
-            threshold_micro,
-            n,
-            max_shingle_df,
-            probe_toks=toks_all.filter(
-                F.col(split_col) != train_value
-            ).select(id_col, "__toks"),
-            source_toks=toks_all.filter(
-                F.col(split_col) == train_value
-            ).select(id_col, "__toks"),
+    with conf_scope(spark, {CACHED_PLAN_AQE: "true"}):
+        toks_all = docs.select(
+            F.col(id_col),
+            F.col(split_col),
+            F.array_distinct(shingles(F.col(text_col), n)).alias("__toks"),
         ).persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            out.count()  # materialize pairs while the shingle cache is hot
-            from mvrepair import cache as _cache
+            out = containment_pairs(
+                None,
+                None,
+                text_col,
+                id_col,
+                threshold_micro,
+                n,
+                max_shingle_df,
+                probe_toks=toks_all.filter(
+                    F.col(split_col) != train_value
+                ).select(id_col, "__toks"),
+                source_toks=toks_all.filter(
+                    F.col(split_col) == train_value
+                ).select(id_col, "__toks"),
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+            try:
+                out.count()  # materialize pairs while the shingle cache is hot
+                from mvrepair import cache as _cache
 
-            _cache.adopt(out)
-        except Exception:
-            out.unpersist()
-            raise
-    finally:
-        toks_all.unpersist()
-        if old is None:
-            spark.conf.unset(_AQE_CACHE_KEY)
-        else:
-            spark.conf.set(_AQE_CACHE_KEY, old)
+                _cache.adopt(out)
+            except Exception:
+                out.unpersist()
+                raise
+        finally:
+            toks_all.unpersist()
     return out
 
 
@@ -1342,66 +1323,62 @@ def minhash_calibration(
     corpus-sized shingle cache before returning.
     """
     spark = df.sparkSession
-    _AQE_CACHE_KEY = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    old = spark.conf.get(_AQE_CACHE_KEY, None)
-    spark.conf.set(_AQE_CACHE_KEY, "true")
-    owned = shingle_tokens(df, text_col, id_col, n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    try:
-        cands = minhash_candidate_pairs(df, text_col, id_col, n, toks=owned)
-        sigs = minhash_signatures(df, text_col, id_col, n, toks=owned)
-        sa = sigs.select(
-            F.col(id_col).alias("id_a"),
-            *[F.col(f"sig_{i}").alias(f"__a{i}") for i in range(N_HASHES)],
-        )
-        sb = sigs.select(
-            F.col(id_col).alias("id_b"),
-            *[F.col(f"sig_{i}").alias(f"__b{i}") for i in range(N_HASHES)],
-        )
-        ta = owned.select(
-            F.col(id_col).alias("id_a"), F.col("__toks").alias("__ta")
-        )
-        tb = owned.select(
-            F.col(id_col).alias("id_b"), F.col("__toks").alias("__tb")
-        )
-        matches = sum(
-            F.when(F.col(f"__a{i}") == F.col(f"__b{i}"), 1).otherwise(0)
-            for i in range(N_HASHES)
-        ).cast("long")
-        inter = F.size(F.array_intersect(F.col("__ta"), F.col("__tb")))
-        union = F.size(F.array_union(F.col("__ta"), F.col("__tb")))
-        grid = (
-            cands.join(sa, "id_a")
-            .join(sb, "id_b")
-            .join(ta, "id_a")
-            .join(tb, "id_b")
-            .select(
-                matches.alias("matches"),
-                inter.cast("long").alias("__i"),
-                union.cast("long").alias("__u"),
-            )
-            .filter(F.col("__u") > 0)
-            .select(
-                "matches",
-                F.expr("(10 * __i) DIV __u").alias("jaccard_decile"),
-            )
-            .groupBy("matches", "jaccard_decile")
-            .agg(F.count(F.lit(1)).alias("n_pairs"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+    with conf_scope(spark, {CACHED_PLAN_AQE: "true"}):
+        owned = shingle_tokens(df, text_col, id_col, n).persist(
+            StorageLevel.MEMORY_AND_DISK
         )
         try:
-            grid.count()  # materialize while the shingle cache is hot
-            from mvrepair import cache as _cache
+            cands = minhash_candidate_pairs(
+                df, text_col, id_col, n, toks=owned
+            )
+            sigs = minhash_signatures(df, text_col, id_col, n, toks=owned)
+            sa = sigs.select(
+                F.col(id_col).alias("id_a"),
+                *[F.col(f"sig_{i}").alias(f"__a{i}") for i in range(N_HASHES)],
+            )
+            sb = sigs.select(
+                F.col(id_col).alias("id_b"),
+                *[F.col(f"sig_{i}").alias(f"__b{i}") for i in range(N_HASHES)],
+            )
+            ta = owned.select(
+                F.col(id_col).alias("id_a"), F.col("__toks").alias("__ta")
+            )
+            tb = owned.select(
+                F.col(id_col).alias("id_b"), F.col("__toks").alias("__tb")
+            )
+            matches = sum(
+                F.when(F.col(f"__a{i}") == F.col(f"__b{i}"), 1).otherwise(0)
+                for i in range(N_HASHES)
+            ).cast("long")
+            inter = F.size(F.array_intersect(F.col("__ta"), F.col("__tb")))
+            union = F.size(F.array_union(F.col("__ta"), F.col("__tb")))
+            grid = (
+                cands.join(sa, "id_a")
+                .join(sb, "id_b")
+                .join(ta, "id_a")
+                .join(tb, "id_b")
+                .select(
+                    matches.alias("matches"),
+                    inter.cast("long").alias("__i"),
+                    union.cast("long").alias("__u"),
+                )
+                .filter(F.col("__u") > 0)
+                .select(
+                    "matches",
+                    F.expr("(10 * __i) DIV __u").alias("jaccard_decile"),
+                )
+                .groupBy("matches", "jaccard_decile")
+                .agg(F.count(F.lit(1)).alias("n_pairs"))
+                .persist(StorageLevel.MEMORY_AND_DISK)
+            )
+            try:
+                grid.count()  # materialize while the shingle cache is hot
+                from mvrepair import cache as _cache
 
-            _cache.adopt(grid)
-        except Exception:
-            grid.unpersist()
-            raise
-    finally:
-        owned.unpersist()
-        if old is None:
-            spark.conf.unset(_AQE_CACHE_KEY)
-        else:
-            spark.conf.set(_AQE_CACHE_KEY, old)
+                _cache.adopt(grid)
+            except Exception:
+                grid.unpersist()
+                raise
+        finally:
+            owned.unpersist()
     return grid

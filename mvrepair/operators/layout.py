@@ -332,7 +332,9 @@ def bucketed_join(
     # one-file-per-bucket check at scan planning — which
     # write_bucketed's aligned repartition guarantees.  Only
     # bucket-sorted scans consult this, and only this writer creates
-    # them, so the session-wide set is safe.
+    # them, so the session-wide set is safe.  It must be session-wide:
+    # the scan is planned at action time, after this function returns,
+    # so a conf_scope here would not reach it.
     spark.conf.set(
         "spark.sql.legacy.bucketedTableScan.outputOrdering", "true"
     )

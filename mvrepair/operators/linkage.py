@@ -414,7 +414,7 @@ def triangle_counts(
     protocol — VERDICT r11 item #2):
 
     * the oriented frame is ``localCheckpoint``-ed AFTER a
-      ``repartition(N, "src")`` under ``tuning.static_shuffle`` — a
+      ``repartition(N, "src")`` under ``tuning.sized_loop`` — a
       checkpoint's LogicalRDD KEEPS its hashpartitioning in the static
       plan (the pagerank_micro evidence), so the wedge self-join's two
       sides need no Exchange at all (the r11 persist variant
@@ -492,15 +492,15 @@ def _checkpoint_oriented(
 ) -> DataFrame:
     """Materialize the oriented frame hash-partitioned by the wedge key:
     ``repartition(N, "src")`` + eager ``localCheckpoint`` under
-    ``static_shuffle`` so the checkpointed LogicalRDD advertises
+    ``sized_loop`` so the checkpointed LogicalRDD advertises
     ``hashpartitioning(src, N)`` to every consumer — the wedge
     self-join then plans with ZERO exchanges on its inputs.  N derives
     from the measured edge count (``loop_partitions`` — scale-adaptive,
     floored at 1, growing linearly with |E|)."""
-    from mvrepair.tuning import loop_partitions, static_shuffle
+    from mvrepair.tuning import loop_partitions, sized_loop
 
-    npart = loop_partitions(spark, n_edges)
-    with static_shuffle(spark, npart):
+    npart = loop_partitions(n_edges)
+    with sized_loop(spark, n_edges):
         return oriented.repartition(npart, "src").localCheckpoint(eager=True)
 
 

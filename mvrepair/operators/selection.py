@@ -96,17 +96,18 @@ def kcenter_select(
     """
     if k < 1:
         raise ValueError("kcenter_select needs k >= 1")
-    from mvrepair.tuning import aqe_off
+    from mvrepair.tuning import AQE, conf_scope
 
     q = df.select(F.col(id_col), _quant(F.col(vec_col)).alias("qv")).persist()
     try:
-        # r12: the whole greedy loop runs with AQE off (tuning.aqe_off)
-        # — every round is exchange-free (TakeOrdered over a persisted
-        # frame + a map-side update), yet under AQE each round paid a
-        # SECOND job for the cache fill's ResultQueryStage; without it
-        # fill and argmax fuse into the round's single job (2 -> 1 jobs
-        # and ~0.4 -> ~0.2 s per round measured, identical picks).
-        with aqe_off(df.sparkSession):
+        # the whole greedy loop runs with AQE off — every round is
+        # exchange-free (TakeOrdered over a persisted frame + a map-side
+        # update), so AQE has nothing to size, yet under AQE each round
+        # paid a SECOND job for the cache fill's ResultQueryStage;
+        # without it fill and argmax fuse into the round's single job
+        # (2 -> 1 jobs and ~0.4 -> ~0.2 s per round measured, identical
+        # picks).
+        with conf_scope(df.sparkSession, {AQE: "false"}):
             seed = (
                 q.select(id_col, "qv", _d2_norm().alias("n2"))
                 .orderBy(F.desc("n2"), F.asc(id_col))
@@ -241,22 +242,22 @@ def mmr_select(
         raise ValueError("mmr_select needs k >= 1")
     if not (0 < lam_num <= lam_den):
         raise ValueError("need 0 < lam_num <= lam_den")
-    from mvrepair.tuning import aqe_off
+    from mvrepair.tuning import AQE, conf_scope
 
     spark = df.sparkSession
     base = df.select(F.col(id_col), _quant(F.col(vec_col)).alias("qv"))
-    # r12: AQE off for the greedy loop — see kcenter_select (2 -> 1
+    # AQE off for the greedy loop — see kcenter_select (2 -> 1
     # jobs and ~0.4 -> ~0.2 s per round, identical picks; nothing in
     # the exchange-free loop body for AQE to size).  rel persists
     # BEFORE the try so the finally's unpersist is always bound.
-    with aqe_off(spark):
+    with conf_scope(spark, {AQE: "false"}):
         [qrow] = base.orderBy(F.asc(id_col)).limit(1).collect()
     qlit = F.array(*[F.lit(v).cast("long") for v in qrow["qv"]])
     rel = base.select(
         id_col, "qv", _cos_micro(F.col("qv"), qlit).alias("rel_micro")
     ).persist()
     try:
-        with aqe_off(spark):
+        with conf_scope(spark, {AQE: "false"}):
             [seed] = (
                 rel.orderBy(F.desc("rel_micro"), F.asc(id_col))
                 .limit(1)

@@ -23,6 +23,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from mvrepair.tuning import CACHED_PLAN_AQE, conf_scope
+
 QUANT = 1_000_000  # micro-unit quantization: |x|<=9e3 keeps dot < 2^63
 
 
@@ -786,62 +788,55 @@ def semantic_dedup(
     # this cache is hot, release the corpus-sized intermediate before
     # returning, and hand the caller the result's own cache handle.
     spark = df.sparkSession
-    _AQE_CACHE_KEY = (
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    )
-    old = spark.conf.get(_AQE_CACHE_KEY, None)
-    spark.conf.set(_AQE_CACHE_KEY, "true")
-    assigned = prepared.select(
-        F.col(id_col),
-        F.col("__qv"),
-        F.col("__norm"),
-        _best_cluster("t", cent_lits).cast("int").alias("cluster"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        a, b = assigned.alias("a"), assigned.alias("b")
-        prior_max = (
-            a.join(
-                b,
-                (F.col("a.cluster") == F.col("b.cluster"))
-                & (F.col(f"b.{id_col}") < F.col(f"a.{id_col}")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias(id_col),
-                F.floor(_pair_sim("a", "b") * 1_000_000)
-                .cast("long")
-                .alias("__m"),
-            )
-            .groupBy(id_col)
-            .agg(F.max("__m").alias("max_prior_cosine_micro"))
-        )
-        out = (
-            assigned.select(id_col, "cluster")
-            .join(prior_max, id_col, "left")
-            .select(
-                id_col,
-                "cluster",
-                "max_prior_cosine_micro",
-                F.coalesce(
-                    F.col("max_prior_cosine_micro") >= F.lit(threshold_micro),
-                    F.lit(False),
-                ).alias("is_semdup"),
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
+    with conf_scope(spark, {CACHED_PLAN_AQE: "true"}):
+        assigned = prepared.select(
+            F.col(id_col),
+            F.col("__qv"),
+            F.col("__norm"),
+            _best_cluster("t", cent_lits).cast("int").alias("cluster"),
+        ).persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            out.count()  # materialize while the assignment cache is hot
-            from mvrepair import cache as _cache
+            a, b = assigned.alias("a"), assigned.alias("b")
+            prior_max = (
+                a.join(
+                    b,
+                    (F.col("a.cluster") == F.col("b.cluster"))
+                    & (F.col(f"b.{id_col}") < F.col(f"a.{id_col}")),
+                )
+                .select(
+                    F.col(f"a.{id_col}").alias(id_col),
+                    F.floor(_pair_sim("a", "b") * 1_000_000)
+                    .cast("long")
+                    .alias("__m"),
+                )
+                .groupBy(id_col)
+                .agg(F.max("__m").alias("max_prior_cosine_micro"))
+            )
+            out = (
+                assigned.select(id_col, "cluster")
+                .join(prior_max, id_col, "left")
+                .select(
+                    id_col,
+                    "cluster",
+                    "max_prior_cosine_micro",
+                    F.coalesce(
+                        F.col("max_prior_cosine_micro")
+                        >= F.lit(threshold_micro),
+                        F.lit(False),
+                    ).alias("is_semdup"),
+                )
+                .persist(StorageLevel.MEMORY_AND_DISK)
+            )
+            try:
+                out.count()  # materialize while the assignment cache is hot
+                from mvrepair import cache as _cache
 
-            _cache.adopt(out)
-        except Exception:
-            out.unpersist()
-            raise
-    finally:
-        assigned.unpersist()
-        if old is None:
-            spark.conf.unset(_AQE_CACHE_KEY)
-        else:
-            spark.conf.set(_AQE_CACHE_KEY, old)
+                _cache.adopt(out)
+            except Exception:
+                out.unpersist()
+                raise
+        finally:
+            assigned.unpersist()
     return out
 
 

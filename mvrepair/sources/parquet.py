@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from mvrepair.tuning import conf_scope
+
 TABLES = [
     "region",
     "nation",
@@ -30,6 +32,8 @@ TABLES = [
     "documents",
     "embeddings",
 ]
+
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 def _nanos_columns(path: str) -> list[str]:
@@ -66,9 +70,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     converted to µs timestamps)."""
     path = f"{sf_dir}/{name}.parquet"
     nanos = _nanos_columns(path)
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return _normalize(spark.read.parquet(path), nanos)
+    # scoped to the schema read: the scan planned from that schema reads
+    # the nanos columns as longs without the conf
+    with conf_scope(spark, {_NANOS_AS_LONG: "true"} if nanos else {}):
+        df = spark.read.parquet(path)
+    return _normalize(df, nanos)
 
 
 def load_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -78,9 +84,8 @@ def load_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     footer only)."""
     path = f"{sf_dir}/{name}.parquet"
     nanos = _nanos_columns(path)
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(path).schema
+    with conf_scope(spark, {_NANOS_AS_LONG: "true"} if nanos else {}):
+        raw_schema = spark.read.parquet(path).schema
     # file-source streams need a directory; glob-filter down to this table
     stream = (
         spark.readStream.schema(raw_schema)

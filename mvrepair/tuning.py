@@ -1,90 +1,72 @@
-"""Shuffle sizing for fixed-round iterative loops (r11 optimization
-round, guide §1.2/§2.2).
+"""The one session-conf scope, and the loop-sizing rule built on it.
 
-AQE is the right default for one-shot queries: it sizes every exchange
-from runtime statistics.  But a fixed-round graph loop (pagerank,
-label propagation, k-core, connected components) re-pays AQE's price
-every round: each adaptive stage materialization is its OWN job, and a
-round with 3-4 exchanges schedules 4-6 jobs — measured on the bench
-host at 85-190 ms of fixed scheduling latency per job, that is most of
-the loop's wall-clock at fixture scale (pagerank at sf0.1: 10.7 s with
-AQE per-round planning vs 3.4 s with the loop sized once).
+Every registered query shares one SparkSession, so a conf a query
+leaves behind re-plans every query after it.  All session-conf changes
+therefore go through :func:`conf_scope`, which restores each key's
+prior EXPLICIT value on exit — or unsets it when it had none, so an
+unset key never comes out pinned to its effective default.
 
-The loop, however, knows something AQE has to rediscover per stage:
-its working frames are |E|- and |V|-bounded and their sizes are KNOWN
-at loop entry (the edge frame is persisted and counted anyway).  So
-size the shuffle ONCE from the measured edge count and run the rounds
-with static planning — each round compiles to ONE job.  This is
-scale-adaptive, not a local-mode constant: partitions grow linearly
-with the measured row count (a 100 TB edge frame gets thousands of
-partitions, exactly as AQE would give it).
+Two settings stay session-global by design, because Spark reads them
+when the lazy plan is optimized or planned at action time, after any
+scope around the query's construction has closed:
+``spark.sql.python.filterPushdown.enabled`` (events_tokenrange) and
+``spark.sql.legacy.bucketedTableScan.outputOrdering`` (bucketed_join).
+
+Fixed-round loops (pagerank, label propagation, connected components)
+re-pay AQE's price every round: each adaptive stage materialization is
+its own job, and a round with 3-4 exchanges schedules 4-6 jobs
+(pagerank at sf0.1: 10.7 s with per-round AQE planning vs 3.4 s with
+the loop sized once).  A loop's working frames are |E|-bounded and
+their size is measured at loop entry, so :func:`sized_loop` sizes the
+shuffle once from that count and runs the rounds with static planning.
 """
 
 from __future__ import annotations
 
 from contextlib import contextmanager
 
+AQE = "spark.sql.adaptive.enabled"
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+# Cached plans compile with AQE restricted unless this is on (Spark
+# keeps a cached plan's output partitioning stable by default).  It is
+# read when persist() registers the plan, so scope it around the
+# persist and its materializing action.
+CACHED_PLAN_AQE = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
 # One shuffle partition per ~100k edge rows keeps loop-stage tasks in
-# the millisecond-to-second range (two longs a row ≈ a few MB per
-# partition materialized, well under the guide §2.2 100MB-1GB band —
-# graph rounds are join/agg CPU-bound, not byte-bound).
+# the millisecond-to-second range (graph rounds are join/agg CPU-bound,
+# not byte-bound); partitions grow linearly with the measured rows.
 ROWS_PER_PARTITION = 100_000
 
 
-def loop_partitions(spark, n_rows: int) -> int:
+@contextmanager
+def conf_scope(spark, confs: dict[str, str]):
+    """Set ``confs`` on the session for the enclosed block; on exit
+    restore each key's prior explicit value, or unset it if it had
+    none."""
+    prior = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def loop_partitions(n_rows: int) -> int:
     """Shuffle-partition count for a fixed-round loop over ``n_rows``
-    working rows: ceil(n_rows / ROWS_PER_PARTITION), at least 1 — small
-    inputs don't pay 32-task dispatch for kilobyte stages, and big
-    inputs grow linearly past the core count exactly as AQE would size
-    them.  (r11 ADVICE: the old ``min(by_size, par) if by_size < par
-    else by_size`` returned by_size on BOTH branches — the default-
-    parallelism clamp was dead code, and by_size alone is the behavior
-    every r11 measurement was taken under, so it is now the stated
-    contract.)"""
-    _ = spark  # kept in the signature: callers pass it, future floors may need it
+    working rows: ceil(n_rows / ROWS_PER_PARTITION), at least 1."""
     return max(1, -(-int(n_rows) // ROWS_PER_PARTITION))
 
 
-@contextmanager
 def sized_loop(spark, n_rows: int):
-    """Run a fixed-round loop body with AQE off and shuffle partitions
-    derived from the measured working-set size; restores both confs on
-    exit.  Only loop-internal actions (the per-round checkpoints /
-    collects) plan under this context — frames RETURNED to the caller
-    are planned at action time, outside it."""
-    with static_shuffle(spark, loop_partitions(spark, n_rows)):
-        yield
-
-
-@contextmanager
-def aqe_off(spark):
-    """AQE off for the enclosed actions, shuffle partitions untouched;
-    restores on exit.  For EXCHANGE-FREE iterative loops (the greedy
-    selection loops: per-round TakeOrdered over a persisted frame +
-    a map-side update): under AQE even an exchange-free action that
-    fills an InMemoryRelation pays a separate ResultQueryStage JOB for
-    the cache fill — measured r12: 2 jobs and 0.26-0.42 s per greedy
-    round with AQE, 1 job and 0.17-0.28 s without, identical picks.
-    There is nothing for AQE to size here (no exchange in the loop
-    body), so turning it off costs no coalescing/skew handling."""
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-
-
-@contextmanager
-def static_shuffle(spark, n_partitions: int):
-    """AQE off + a fixed shuffle-partition count for the enclosed
-    actions; restores both confs on exit."""
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(int(n_partitions)))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    """AQE off and shuffle partitions sized from ``n_rows`` for the
+    enclosed loop actions.  Frames RETURNED from the block are planned
+    at action time, outside the scope."""
+    return conf_scope(
+        spark, {AQE: "false", SHUFFLE_PARTITIONS: str(loop_partitions(n_rows))}
+    )

@@ -164,6 +164,38 @@ def test_orc_roundtrip_value_exact_and_pushdown(spark, sf_dir):
     assert "PushedFilters" in plan and "EqualTo(l_orderkey,1)" in plan.replace(" ", "")
 
 
+def test_load_table_reads_nanos_timestamps_without_leaking_conf(
+    spark, tmp_path
+):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mvrepair.sources.parquet import load_table, load_stream
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    ns = [1_700_000_000_123_456_789, 1_600_000_000_000_001_999]
+    pq.write_table(
+        pa.table(
+            {
+                "id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array(ns, pa.timestamp("ns")),
+            }
+        ),
+        str(tmp_path / "t.parquet"),
+    )
+    before = spark.conf.get(key, None)
+    df = load_table(spark, str(tmp_path), "t")
+    load_stream(spark, str(tmp_path), "t")
+    assert spark.conf.get(key, None) == before
+    # the scan runs after the conf is gone: truncated to µs, exactly
+    rows = df.select("id", "ts", F.unix_micros("ts").alias("us")).collect()
+    got = {r["id"]: (r["ts"].microsecond, r["us"]) for r in rows}
+    assert got == {
+        1: (123_456, ns[0] // 1000),
+        2: (1, ns[1] // 1000),
+    }
+
+
 # ------------------------------------------------- token-range source
 
 
@@ -185,42 +217,46 @@ def test_tokenrange_scan_is_exact_partition_of_table(spark, sf_dir):
 
     from mvrepair.sources.tokenrange import TokenRangeDataSource
 
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(TokenRangeDataSource)
-    df = (
-        spark.read.format("mvrepair_tokenrange")
-        .option("path", f"{sf_dir}/events.parquet")
-        .option("pk", "event_id")
-        .option("splits", "4")
-        .option("columns", "event_id,event_type")
-        .load()
-    )
-    plain = spark.read.parquet(f"{sf_dir}/events.parquet")
-    # every row appears in exactly one range: ids through the source
-    # equal the raw table's ids, with no duplicates
-    ids = [r["event_id"] for r in df.select("event_id").collect()]
-    assert len(ids) == len(set(ids)) == plain.count()
-    # per-row range assignment matches the python token twin
-    from mvrepair.sources.tokenrange import TOKEN_SPACE, py_token
+    from mvrepair.tuning import conf_scope
 
-    width = TOKEN_SPACE // 4
-    sample = df.select("event_id", "token", "split_id").limit(50).collect()
-    for r in sample:
-        assert r["token"] == py_token(r["event_id"])
-        assert r["split_id"] == min(r["token"] // width, 3)
-    # pushdown: the equality filter reaches the reader, so the
-    # post-scan Filter keeps only the isnotnull guard
-    plan = (
-        df.filter(F.col("event_type") == "view")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BatchScan mvrepair_tokenrange" in plan
-    assert "view" not in plan.split("BatchScan")[0], (
-        "equality filter re-applied above the scan — pushFilters lost:\n"
-        + plan
-    )
+    with conf_scope(
+        spark, {"spark.sql.python.filterPushdown.enabled": "true"}
+    ):
+        spark.dataSource.register(TokenRangeDataSource)
+        df = (
+            spark.read.format("mvrepair_tokenrange")
+            .option("path", f"{sf_dir}/events.parquet")
+            .option("pk", "event_id")
+            .option("splits", "4")
+            .option("columns", "event_id,event_type")
+            .load()
+        )
+        plain = spark.read.parquet(f"{sf_dir}/events.parquet")
+        # every row appears in exactly one range: ids through the source
+        # equal the raw table's ids, with no duplicates
+        ids = [r["event_id"] for r in df.select("event_id").collect()]
+        assert len(ids) == len(set(ids)) == plain.count()
+        # per-row range assignment matches the python token twin
+        from mvrepair.sources.tokenrange import TOKEN_SPACE, py_token
+
+        width = TOKEN_SPACE // 4
+        sample = df.select("event_id", "token", "split_id").limit(50).collect()
+        for r in sample:
+            assert r["token"] == py_token(r["event_id"])
+            assert r["split_id"] == min(r["token"] // width, 3)
+        # pushdown: the equality filter reaches the reader, so the
+        # post-scan Filter keeps only the isnotnull guard
+        plan = (
+            df.filter(F.col("event_type") == "view")
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+        assert "BatchScan mvrepair_tokenrange" in plan
+        assert "view" not in plan.split("BatchScan")[0], (
+            "equality filter re-applied above the scan — pushFilters lost:\n"
+            + plan
+        )
 
 
 def test_tokenrange_option_validation():

@@ -476,16 +476,14 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
     # disable broadcast so the planner must pick SMJ — the point is that
     # bucket co-location removes the SMJ's shuffles, not that tiny tables
     # broadcast anyway
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    from mvrepair.tuning import conf_scope
+
+    with conf_scope(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         joined = bucketed_join(
             spark, "t_bucket_base", "t_bucket_mv", ["id"], how="inner"
         )
         assert_no_shuffle_join(joined)
         assert joined.count() == 900
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
     spark.sql("DROP TABLE IF EXISTS t_bucket_base")
     spark.sql("DROP TABLE IF EXISTS t_bucket_mv")
 
