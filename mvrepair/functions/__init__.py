@@ -1,5 +1,6 @@
-"""Column-expression building blocks (all JVM-side, codegen-friendly).
+"""Expression building blocks (all JVM-side, codegen-friendly).
 
+- ``ident`` / ``sql_str``: quote a name or a string for SQL text.
 - ``deep_eq``: null-safe deep equality per logical type, parity with
   ``Objects.deepEquals`` at /root/reference/src/main/java/mvsync/MvSync.java:491
   (null==null equal; null vs value unequal; byte[]/list/set/map element-wise).
@@ -7,19 +8,64 @@
   ``DBOperations.convertToString`` (db/DBOperations.java:446-460):
   Date→epoch-millis, bytes→UTF-8, null→"null".
 
+``deep_eq`` and ``render_value`` return SQL expression TEXT, not Columns:
+the reconcile/report/repair builders compose one string per output column
+and hand it to ``selectExpr``/``F.expr``/``filter``, which parse it in one
+py4j call.  Composing the same tree from PySpark Column calls costs
+several round trips per node (PySpark 4 captures each call's call site).
+The texts lean on SQL precedence (comparison > NOT > AND > OR) rather than
+parentheses: to tell ``(expr)`` from a row constructor the parser looks
+ahead through the whole group, and each distinct look-ahead stays in its
+prediction cache on the driver heap for the life of the JVM.
+
 No Python UDFs here — everything compiles to Catalyst expressions so the
 whole compare stays inside WholeStageCodegen at 100 TB scale.
 """
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, functions as F
 
 from mvrepair.schema import normalize_type
 
+# Characters a plain '…' literal holds verbatim under either setting of
+# spark.sql.parser.escapedStringLiterals (no quote, no backslash) and that
+# variable substitution leaves alone (no ``$``).
+_PLAIN_LITERAL = re.compile(r"[A-Za-z0-9 _:,.=(){}<>-]*")
 
-def deep_eq(a: Column, b: Column, logical_type: str) -> Column:
-    """Null-safe deep equality for one column pair.
+
+def ident(name: str) -> str:
+    """Backtick-quoted SQL identifier (embedded backticks doubled)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str(s: str) -> str:
+    """SQL string literal that parses to ``s`` whatever
+    ``spark.sql.parser.escapedStringLiterals`` says.  Neither ``''`` nor
+    ``\\'`` escapes a quote in both modes, so any string outside the plain
+    set goes in as its UTF-8 bytes, ``CAST(X'…' AS STRING)`` (folded to a
+    literal by the optimizer)."""
+    if _PLAIN_LITERAL.fullmatch(s):
+        return f"'{s}'"
+    return f"CAST(X'{s.encode('utf-8').hex().upper()}' AS STRING)"
+
+
+def coalesce_sql(exprs: list[str]) -> str:
+    """``coalesce`` over string-valued SQL texts; one operand stands
+    alone, none is a null string."""
+    if not exprs:
+        return "CAST(NULL AS STRING)"
+    if len(exprs) == 1:
+        return exprs[0]
+    return f"coalesce({', '.join(exprs)})"
+
+
+def deep_eq(a: str, b: str, logical_type: str) -> str:
+    """Null-safe deep equality for one column pair (SQL text over the
+    operand texts ``a``/``b``; a comparison, so ``NOT`` applies to all of
+    it).
 
     SET semantics: CQL sets are unordered, so compare sorted arrays
     (SURVEY §1 — "sets: sorted array for deterministic equality").
@@ -29,60 +75,41 @@ def deep_eq(a: Column, b: Column, logical_type: str) -> Column:
     """
     t = normalize_type(logical_type)
     if t == "SET":
-        return F.array_sort(a).eqNullSafe(F.array_sort(b))
+        return f"array_sort({a}) <=> array_sort({b})"
     if t == "MAP":
-        ea, eb = F.array_sort(F.map_entries(a)), F.array_sort(F.map_entries(b))
         return (
-            F.when(a.isNull() & b.isNull(), F.lit(True))
-            .when(a.isNull() | b.isNull(), F.lit(False))
-            .otherwise(ea == eb)
+            f"CASE WHEN {a} IS NULL AND {b} IS NULL THEN true"
+            f" WHEN {a} IS NULL OR {b} IS NULL THEN false"
+            f" ELSE array_sort(map_entries({a})) = array_sort(map_entries({b})) END"
         )
-    return a.eqNullSafe(b)
+    return f"{a} <=> {b}"
 
 
-def render_value(c: Column, logical_type: str) -> Column:
-    """Render a value to text, ``convertToString`` parity
-    (DBOperations.java:446-460): null→"null", TIMESTAMP→epoch millis,
-    BLOB→UTF-8 string; collections render Java-style but in sorted order
-    (the reference's map iteration order is not deterministic — SURVEY §7
-    "match the parsed content, not byte order")."""
+def render_value(c: str, logical_type: str) -> str:
+    """Render a value to text (SQL text over the operand text ``c``),
+    ``convertToString`` parity (DBOperations.java:446-460): null→"null",
+    TIMESTAMP→epoch millis, BLOB→UTF-8 string; collections render
+    Java-style but in sorted order (the reference's map iteration order
+    is not deterministic — SURVEY §7 "match the parsed content, not byte
+    order")."""
     t = normalize_type(logical_type)
     if t == "TIMESTAMP":
-        rendered = F.unix_millis(c).cast("string")
+        rendered = f"CAST(unix_millis({c}) AS STRING)"
     elif t == "DATE":
-        rendered = F.unix_millis(c.cast("timestamp")).cast("string")
-    elif t == "BLOB":
-        rendered = c.cast("string")  # binary → UTF-8 text
+        rendered = f"CAST(unix_millis(CAST({c} AS TIMESTAMP)) AS STRING)"
     elif t in ("LIST", "SET"):
-        arr = F.array_sort(c) if t == "SET" else c
-        rendered = F.concat(
-            F.lit("["), F.array_join(arr, ", ", null_replacement="null"), F.lit("]")
-        )
+        arr = f"array_sort({c})" if t == "SET" else c
+        rendered = f"concat('[', array_join({arr}, ', ', 'null'), ']')"
     elif t == "MAP":
-        entries = F.array_sort(F.map_entries(c))
-        rendered = F.concat(
-            F.lit("{"),
-            F.array_join(
-                F.transform(
-                    entries,
-                    lambda e: F.concat(
-                        e["key"].cast("string"), F.lit("="), e["value"].cast("string")
-                    ),
-                ),
-                ", ",
-            ),
-            F.lit("}"),
+        rendered = (
+            f"concat('{{', array_join(transform(array_sort(map_entries({c})),"
+            " e -> concat(CAST(e.`key` AS STRING), '=', CAST(e.`value` AS STRING))),"
+            " ', '), '}')"
         )
     else:
-        rendered = c.cast("string")
-    return F.coalesce(rendered, F.lit("null"))
-
-
-def first_non_null(cols: list[Column]) -> Column:
-    """coalesce over an arbitrary (possibly empty) column list."""
-    if not cols:
-        return F.lit(None)
-    return F.coalesce(*cols)
+        # BLOB included: binary → UTF-8 text
+        rendered = f"CAST({c} AS STRING)"
+    return f"coalesce({rendered}, 'null')"
 
 
 def stable_hash64(c: Column) -> Column:

@@ -4,7 +4,7 @@ Parity with the reference's codahale registry ``MvSyncJobMetrics``
 (/root/reference/src/main/java/mvsync/output/MvSyncJobMetrics.java:6-23):
 the same 16 counter names, driver-side.  Per-record counters
 (ProcessRecord, MissingBaseTable, …) are fed from the ``df.observe``
-results of the report action — one pass over the data, exactly-once per
+results of the runner's one full pass over the data, exactly-once per
 action (better than accumulators' at-least-once under task retries) —
 never from a second aggregation job.
 """

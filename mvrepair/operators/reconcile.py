@@ -38,7 +38,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, functions as F
 
 from mvrepair.config import SyncSettings
-from mvrepair.functions import deep_eq, render_value
+from mvrepair.functions import coalesce_sql, deep_eq, ident, render_value, sql_str
 from mvrepair.schema import (
     COLLECTION_TYPES,
     MVSpec,
@@ -60,48 +60,46 @@ MV_PREFIX = "mv__"
 _PRESENT = "present"
 _IN_WINDOW = "in_window"
 
-
-def _least(cols: list[Column]) -> Column:
-    if not cols:
-        return F.lit(None).cast("long")
-    if len(cols) == 1:
-        return cols[0]
-    return F.least(*cols)
-
-
-def _greatest(cols: list[Column]) -> Column:
-    if not cols:
-        return F.lit(None).cast("long")
-    if len(cols) == 1:
-        return cols[0]
-    return F.greatest(*cols)
+# The rows that reach a report or a repair plan (CONSISTENT and SKIPPED
+# keys only feed the counters — MvSync.java:374-378).
+PROBLEM_ROWS = f"problem NOT IN ('{CONSISTENT}', '{SKIPPED}')"
 
 
 def _in_window_expr(
     df: DataFrame, spec: MVSpec, window: tuple[int, int] | None
-) -> Column:
-    """Per-row in-window flag (negation of shouldSkip, MvSync.java:430-450).
+) -> str:
+    """Per-row in-window flag (negation of shouldSkip, MvSync.java:430-450),
+    as SQL text.
 
     Only writetimes of common, non-collection columns whose value is
     non-null participate (MvSync.java:452-479).  Comparison happens in
     SECONDS after a truncating µs→sec cast (:434-443).
     """
     if window is None:
-        return F.lit(True)
+        return "true"
     start_us, end_us = window
     start_sec = start_us // 1_000_000
     end_sec = end_us // 1_000_000
     terms = [
-        F.when(F.col(c).isNotNull(), F.col(writetime_col(c)))
+        f"CASE WHEN {ident(c)} IS NOT NULL THEN {ident(writetime_col(c))} END"
         for c, t in spec.compare_columns
         if t not in COLLECTION_TYPES and writetime_col(c) in df.columns
     ]
+    if not terms:
+        least = most = "CAST(NULL AS BIGINT)"
+    elif len(terms) == 1:
+        least = most = terms[0]
+    else:
+        least = f"least({', '.join(terms)})"
+        most = f"greatest({', '.join(terms)})"
+
     # (long) cast in Java truncates toward zero — mirror exactly.
-    least_sec = (_least(terms).cast("double") / 1_000_000.0).cast("long")
-    most_sec = (_greatest(terms).cast("double") / 1_000_000.0).cast("long")
-    skip = (F.lit(start_sec) > least_sec) | (most_sec > F.lit(end_sec))
+    def sec(us: str) -> str:
+        return f"CAST(CAST({us} AS DOUBLE) / 1000000.0D AS BIGINT)"
+
+    skip = f"{start_sec} > {sec(least)} OR {sec(most)} > {end_sec}"
     # no eligible writetime → sentinel MAX/MIN in the reference → never skipped
-    return ~F.coalesce(skip, F.lit(False))
+    return f"NOT coalesce({skip}, false)"
 
 
 def _prepare_side(
@@ -113,11 +111,11 @@ def _prepare_side(
 ) -> DataFrame:
     pk = spec.mv_pk
     others = [c for c in df.columns if c not in pk]
-    out = df.select(
-        *pk,
-        *[F.col(c).alias(prefix + c) for c in others],
-        _in_window_expr(df, spec, window).alias(prefix + _IN_WINDOW),
-        F.lit(True).alias(prefix + _PRESENT),
+    out = df.selectExpr(
+        *map(ident, pk),
+        *[f"{ident(c)} AS {ident(prefix + c)}" for c in others],
+        f"{_in_window_expr(df, spec, window)} AS {ident(prefix + _IN_WINDOW)}",
+        f"true AS {ident(prefix + _PRESENT)}",
     )
     if dedup_first:
         # O8 fine print: only the first row per key per side is considered
@@ -126,44 +124,56 @@ def _prepare_side(
     return out
 
 
-def _diff_exprs(spec: MVSpec) -> tuple[Column, Column, Column, Column]:
-    """First-mismatch (alphabetical) column name/type + rendered values.
+def _diff_exprs(spec: MVSpec) -> tuple[str, str, str, str]:
+    """First-mismatch (alphabetical) column name/type + rendered values,
+    as SQL text.
 
     getInconsistentTuple parity (MvSync.java:482-510): null==null equal,
     null vs value is a mismatch whose null side renders as null.
     """
     names, types, base_vals, mv_vals = [], [], [], []
     for c, t in spec.compare_columns:
-        neq = ~deep_eq(F.col(BASE_PREFIX + c), F.col(MV_PREFIX + c), t)
-        names.append(F.when(neq, F.lit(c)))
-        types.append(F.when(neq, F.lit(t)))
-        base_vals.append(
-            F.when(
-                neq,
-                F.when(
-                    F.col(BASE_PREFIX + c).isNotNull(),
-                    render_value(F.col(BASE_PREFIX + c), t),
-                ),
+        b, m = ident(BASE_PREFIX + c), ident(MV_PREFIX + c)
+        neq = f"NOT {deep_eq(b, m, t)}"
+        names.append(f"CASE WHEN {neq} THEN {sql_str(c)} END")
+        types.append(f"CASE WHEN {neq} THEN {sql_str(t)} END")
+        for side, vals in ((b, base_vals), (m, mv_vals)):
+            vals.append(
+                f"CASE WHEN {neq} THEN CASE WHEN {side} IS NOT NULL"
+                f" THEN {render_value(side, t)} END END"
             )
-        )
-        mv_vals.append(
-            F.when(
-                neq,
-                F.when(
-                    F.col(MV_PREFIX + c).isNotNull(),
-                    render_value(F.col(MV_PREFIX + c), t),
-                ),
-            )
-        )
-    if not names:
-        null_s = F.lit(None).cast("string")
-        return null_s, null_s, null_s, null_s
     return (
-        F.coalesce(*names) if len(names) > 1 else names[0],
-        F.coalesce(*types) if len(types) > 1 else types[0],
-        F.coalesce(*base_vals) if len(base_vals) > 1 else base_vals[0],
-        F.coalesce(*mv_vals) if len(mv_vals) > 1 else mv_vals[0],
+        coalesce_sql(names),
+        coalesce_sql(types),
+        coalesce_sql(base_vals),
+        coalesce_sql(mv_vals),
     )
+
+
+def problem_in(problems: list[str]) -> str:
+    """SQL predicate: ``problem`` is one of ``problems`` (none: ``false``).
+    The fix flags are known when the plan is built, so they pick the list
+    rather than becoming literals in the expression."""
+    if not problems:
+        return "false"
+    return "problem IN (" + ", ".join(f"'{p}'" for p in problems) + ")"
+
+
+def upsert_problems(settings: SyncSettings) -> list[str]:
+    """The problem classes whose keys get upserts under ``settings``
+    (DBOperations.java:240-387 runs for these two when their flag is on)."""
+    return [
+        p
+        for p, on in (
+            (INCONSISTENT, settings.fix_inconsistent_mv),
+            (MISSING_IN_MV_TABLE, settings.fix_missing_mv),
+        )
+        if on
+    ]
+
+
+def _present(prefix: str) -> str:
+    return f"coalesce({ident(prefix + _PRESENT)}, false)"
 
 
 def classify(
@@ -193,34 +203,33 @@ def classify(
 
     joined = base_p.join(mv_p, on=spec.mv_pk, how="full_outer")
 
-    base_present = F.coalesce(F.col(BASE_PREFIX + _PRESENT), F.lit(False))
-    mv_present = F.coalesce(F.col(MV_PREFIX + _PRESENT), F.lit(False))
+    base_present, mv_present = _present(BASE_PREFIX), _present(MV_PREFIX)
     # skip-either-side (MvSync.java:325-347): an out-of-window row on either
     # present side skips the whole key.
-    skipped = (base_present & ~F.col(BASE_PREFIX + _IN_WINDOW)) | (
-        mv_present & ~F.col(MV_PREFIX + _IN_WINDOW)
+    skipped = (
+        f"coalesce({base_present} AND NOT {ident(BASE_PREFIX + _IN_WINDOW)}"
+        f" OR {mv_present} AND NOT {ident(MV_PREFIX + _IN_WINDOW)}, false)"
     )
-    skipped = F.coalesce(skipped, F.lit(False))
-
     diff_name, diff_type, base_val, mv_val = _diff_exprs(spec)
-    both = base_present & mv_present
+    compared = f"NOT {skipped} AND {base_present} AND {mv_present}"
 
     problem = (
-        F.when(skipped, F.lit(SKIPPED))
-        .when(~base_present, F.lit(MISSING_IN_BASE_TABLE))
-        .when(~mv_present, F.lit(MISSING_IN_MV_TABLE))
-        .when(diff_name.isNotNull(), F.lit(INCONSISTENT))
-        .otherwise(F.lit(CONSISTENT))
+        f"CASE WHEN {skipped} THEN '{SKIPPED}'"
+        f" WHEN NOT {base_present} THEN '{MISSING_IN_BASE_TABLE}'"
+        f" WHEN NOT {mv_present} THEN '{MISSING_IN_MV_TABLE}'"
+        f" WHEN {diff_name} IS NOT NULL THEN '{INCONSISTENT}'"
+        f" ELSE '{CONSISTENT}' END"
     )
-
-    return joined.withColumns(
-        {
-            "problem": problem,
-            "diff_column": F.when(~skipped & both, diff_name),
-            "diff_type": F.when(~skipped & both, diff_type),
-            "base_value": F.when(~skipped & both, base_val),
-            "mv_value": F.when(~skipped & both, mv_val),
-        }
+    diffs = {
+        "diff_column": diff_name,
+        "diff_type": diff_type,
+        "base_value": base_val,
+        "mv_value": mv_val,
+    }
+    return joined.selectExpr(
+        "*",
+        f"{problem} AS problem",
+        *[f"CASE WHEN {compared} THEN {e} END AS {n}" for n, e in diffs.items()],
     )
 
 
@@ -234,10 +243,8 @@ def reconcile_report(
     produce no report output — MvSync.java:374-378), with the PK, the
     classification, and the first-mismatch diff cell."""
     wide = classify(base_df, mv_df, spec, window)
-    return wide.filter(
-        ~F.col("problem").isin(CONSISTENT, SKIPPED)
-    ).select(
-        *spec.mv_pk,
+    return wide.filter(PROBLEM_ROWS).selectExpr(
+        *map(ident, spec.mv_pk),
         "problem",
         "diff_column",
         "diff_type",
@@ -274,68 +281,69 @@ class JobStatsResult:
 
 def stats_agg_exprs(
     settings: SyncSettings | None = None,
-    upsert_err: Column | None = None,
-    delete_err: Column | None = None,
+    upsert_err: str | None = None,
+    delete_err: str | None = None,
 ) -> list[Column]:
     """Aggregate expressions computing the 15 JobStats counters from a
     classified wide DataFrame in ONE pass (increments mirrored from
     MvSync.java:315, :350-378, :384-412).
 
-    ``upsert_err`` / ``delete_err`` are per-row error-message expressions
-    (null = the mutation would succeed) — pass the same expressions given
-    to ``format_report_categorized`` so err/success counters agree with the
-    ERR_* report categories (MvSync.java:399-412 counts err vs success off
-    the mutation result the same way).  When omitted, the success path is
-    assumed; error counts then come from the repair applier when one runs.
+    ``upsert_err`` / ``delete_err`` are per-row error-message SQL
+    expressions (null = the mutation would succeed) — pass the same
+    expressions given to ``format_report_categorized`` so err/success
+    counters agree with the ERR_* report categories (MvSync.java:399-412
+    counts err vs success off the mutation result the same way).  When
+    omitted, the success path is assumed; error counts then come from the
+    repair applier when one runs.
     """
     settings = settings or SyncSettings()
-    p = F.col("problem")
+    deleted = [MISSING_IN_BASE_TABLE] if settings.fix_orphan_mv else []
+    repaired = deleted + upsert_problems(settings)
+    unrepaired = [
+        p
+        for p in (MISSING_IN_BASE_TABLE, INCONSISTENT, MISSING_IN_MV_TABLE)
+        if p not in repaired
+    ]
+    del_attempted = problem_in(deleted)
+    upsert_attempted = problem_in(upsert_problems(settings))
 
-    def cnt(cond: Column) -> Column:
-        return F.sum(F.when(cond, 1).otherwise(0)).cast("long")
+    def failed(attempted: str, err: str | None) -> tuple[str, str]:
+        if err is None:
+            return "false", attempted
+        return f"{attempted} AND {err} IS NOT NULL", f"{attempted} AND {err} IS NULL"
 
-    fix_orphan = settings.fix_orphan_mv
-    fix_inc = settings.fix_inconsistent_mv
-    fix_missing = settings.fix_missing_mv
-
-    repairable = (
-        ((p == MISSING_IN_BASE_TABLE) & F.lit(fix_orphan))
-        | ((p == INCONSISTENT) & F.lit(fix_inc))
-        | ((p == MISSING_IN_MV_TABLE) & F.lit(fix_missing))
-    )
-    not_repaired = p.isin(MISSING_IN_BASE_TABLE, INCONSISTENT, MISSING_IN_MV_TABLE) & ~repairable
-    del_attempted = (p == MISSING_IN_BASE_TABLE) & F.lit(fix_orphan)
-    upsert_attempted = ((p == INCONSISTENT) & F.lit(fix_inc)) | (
-        (p == MISSING_IN_MV_TABLE) & F.lit(fix_missing)
-    )
-    del_err = (
-        F.lit(False) if delete_err is None else del_attempted & delete_err.isNotNull()
-    )
-    ups_err = (
-        F.lit(False) if upsert_err is None else upsert_attempted & upsert_err.isNotNull()
-    )
-
-    return [
-        F.count(F.lit(1)).alias("totRecords"),
-        cnt(p == SKIPPED).alias("skippedRecords"),
-        cnt(p == CONSISTENT).alias("consistentRecords"),
-        cnt(p == INCONSISTENT).alias("inConsistentRecords"),
-        cnt(p == MISSING_IN_BASE_TABLE).alias("missingBaseTableRecords"),
-        cnt(p == MISSING_IN_MV_TABLE).alias("missingMvRecords"),
-        cnt(repairable).alias("repairRecords"),
-        cnt(not_repaired).alias("notRepairRecords"),
-        cnt(del_attempted).alias("delAttemptedRecords"),
-        cnt(del_err).alias("delErrRecords"),
-        cnt(del_attempted & ~del_err).alias("delSuccessRecords"),
-        F.lit(0).cast("long").alias("notDelRecords"),
-        cnt(upsert_attempted).alias("upsertAttemptedRecords"),
-        cnt(ups_err).alias("upsertErrRecords"),
-        cnt(upsert_attempted & ~ups_err).alias("upsertSuccessRecords"),
+    del_err, del_ok = failed(del_attempted, delete_err)
+    ups_err, ups_ok = failed(upsert_attempted, upsert_err)
+    counted = {
+        "skippedRecords": f"problem = '{SKIPPED}'",
+        "consistentRecords": f"problem = '{CONSISTENT}'",
+        "inConsistentRecords": f"problem = '{INCONSISTENT}'",
+        "missingBaseTableRecords": f"problem = '{MISSING_IN_BASE_TABLE}'",
+        "missingMvRecords": f"problem = '{MISSING_IN_MV_TABLE}'",
+        "repairRecords": problem_in(repaired),
+        "notRepairRecords": problem_in(unrepaired),
+        "delAttemptedRecords": del_attempted,
+        "delErrRecords": del_err,
+        "delSuccessRecords": del_ok,
+        "notDelRecords": None,
+        "upsertAttemptedRecords": upsert_attempted,
+        "upsertErrRecords": ups_err,
+        "upsertSuccessRecords": ups_ok,
+    }
+    return [F.expr("count(1) AS totRecords")] + [
+        F.expr(
+            f"{'CAST(0 AS BIGINT)' if cond is None else _count_if(cond)} AS {name}"
+        )
+        for name, cond in counted.items()
     ]
 
 
+def _count_if(cond: str) -> str:
+    return f"CAST(sum(CASE WHEN {cond} THEN 1 ELSE 0 END) AS BIGINT)"
+
+
 def read_rows_exprs() -> list[Column]:
-    """ReadRows parity aggregate (rides the same one action via a second
+    """ReadRows parity aggregate (rides the counters' action via a second
     ``observe``): the reference bumps readRows once per scanned row on EACH
     side pre-join (MvSync.java:250); post-join, a key contributes one read
     per present side, so the per-side present sums reproduce the pre-join
@@ -343,13 +351,12 @@ def read_rows_exprs() -> list[Column]:
     approximation, documented in metrics.py).  Kept out of
     ``stats_agg_exprs`` so the 15-counter JobStats contract (and the
     ``mv_stats`` oracle schema) stays exact."""
-    base_present = F.coalesce(F.col(BASE_PREFIX + _PRESENT), F.lit(False))
-    mv_present = F.coalesce(F.col(MV_PREFIX + _PRESENT), F.lit(False))
-
-    def cnt(cond: Column) -> Column:
-        return F.sum(F.when(cond, 1).otherwise(0)).cast("long")
-
-    return [(cnt(base_present) + cnt(mv_present)).alias("readRows")]
+    return [
+        F.expr(
+            f"{_count_if(_present(BASE_PREFIX))}"
+            f" + {_count_if(_present(MV_PREFIX))} AS readRows"
+        )
+    ]
 
 
 def job_stats(

@@ -14,7 +14,7 @@ Re-expresses the reference's imperative per-row CQL repair
   fresh base snapshot with a left-anti join (the set-based equivalent of
   the per-row ``SELECT … ALLOW FILTERING`` guard, DBOperations.java:196-228,
   PreparedStatementHelper.java:80-92).
-- ``apply_repairs_file_mode``: rewrites the MV dataset (join + ``F.when``
+- ``apply_repairs_file_mode``: rewrites the MV dataset (join + ``CASE WHEN``
   column replacement) — the deterministic fixture-harness analogue of the
   CQL mutation path.
 
@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from mvrepair.config import SyncSettings
-from mvrepair.functions import deep_eq, render_value
+from mvrepair.functions import deep_eq, ident, render_value, sql_str
 from mvrepair.schema import (
     COLLECTION_TYPES,
     MVSpec,
@@ -43,6 +43,8 @@ from mvrepair.operators.reconcile import (
     MV_PREFIX,
     SKIPPED,
     classify,
+    problem_in,
+    upsert_problems,
 )
 
 # UpsertFlavors.java:3-8
@@ -51,44 +53,32 @@ TIMESTAMP = "TIMESTAMP"
 TTL = "TTL"
 TIMESTAMP_TTL = "TIMESTAMP_TTL"
 
-_UPSERT_PROBLEMS = (INCONSISTENT, MISSING_IN_MV_TABLE)
+_UPSERT_PROBLEMS = [INCONSISTENT, MISSING_IN_MV_TABLE]
 
 
-def _changed(c: str, t: str) -> Column:
-    """NOT shouldSkipField (DBOperations.java:230-238): skip only when both
-    rows exist and values deep-equal; a missing MV row never skips."""
-    mv_absent = ~F.coalesce(F.col(MV_PREFIX + "present"), F.lit(False))
-    base_c = F.col(BASE_PREFIX + c)
-    mv_c = F.col(MV_PREFIX + c)
-    return mv_absent | ~deep_eq(base_c, mv_c, t)
+def _changed(c: str, t: str) -> str:
+    """NOT shouldSkipField (DBOperations.java:230-238), as SQL text: skip
+    only when both rows exist and values deep-equal; a missing MV row
+    never skips."""
+    mv_absent = f"NOT coalesce({ident(MV_PREFIX + 'present')}, false)"
+    neq = f"NOT {deep_eq(ident(BASE_PREFIX + c), ident(MV_PREFIX + c), t)}"
+    return f"{mv_absent} OR {neq}"
 
 
-def _base_or_null(df_cols: list[str], name: str, cast: str | None = None) -> Column:
+def _base_or_null(df_cols: list[str], name: str, cast: str | None = None) -> str:
     if name in df_cols:
-        return F.col(name)
-    col = F.lit(None)
-    return col.cast(cast) if cast else col
+        return ident(name)
+    return f"CAST(NULL AS {cast})" if cast else "NULL"
 
 
-def _pk_has_null(spec: MVSpec) -> Column:
+def _pk_has_null(spec: MVSpec, has: bool = True) -> str:
     """Reference refuses upserts whose (base-sourced) MV PK has a null
     (DBOperations.java:296-309).  After the using-join the PK columns are
-    the join key; they can only be null if the source row had a null key."""
-    cond = F.lit(False)
-    for c in spec.mv_pk:
-        cond = cond | F.col(c).isNull()
-    return cond
-
-
-def _upsert_candidates(wide: DataFrame, settings: SyncSettings | None) -> DataFrame:
-    settings = settings or SyncSettings()
-    p = F.col("problem")
-    probs = []
-    if settings is None or settings.fix_inconsistent_mv:
-        probs.append(INCONSISTENT)
-    if settings is None or settings.fix_missing_mv:
-        probs.append(MISSING_IN_MV_TABLE)
-    return wide.filter(p.isin(*probs) if probs else F.lit(False))
+    the join key; they can only be null if the source row had a null key.
+    ``has=False`` is the negation: every PK column is set."""
+    if has:
+        return " OR ".join(f"{ident(c)} IS NULL" for c in spec.mv_pk)
+    return " AND ".join(f"{ident(c)} IS NOT NULL" for c in spec.mv_pk)
 
 
 def plan_upserts(
@@ -114,12 +104,10 @@ def plan_upserts(
     ``plan_upsert_errors``.
     """
     settings = settings or SyncSettings()
-    cand = (
-        _upsert_candidates(wide, settings)
-        if respect_flags
-        else wide.filter(F.col("problem").isin(*_UPSERT_PROBLEMS))
+    problems = upsert_problems(settings) if respect_flags else _UPSERT_PROBLEMS
+    cand = wide.filter(problem_in(problems)).filter(
+        _pk_has_null(spec, has=False)
     )
-    cand = cand.filter(~_pk_has_null(spec))
 
     cols = cand.columns
     cells = []
@@ -127,57 +115,49 @@ def plan_upserts(
         base_c = _base_or_null(cols, BASE_PREFIX + c)
         is_coll = t in COLLECTION_TYPES
         wt = (
-            F.lit(None).cast("long")
+            "CAST(NULL AS BIGINT)"
             if (settings.use_latest_ts or is_coll)
-            else _base_or_null(cols, BASE_PREFIX + writetime_col(c), "long")
+            else _base_or_null(cols, BASE_PREFIX + writetime_col(c), "BIGINT")
         )
         ttl = (
-            F.lit(None).cast("int")
+            "CAST(NULL AS INT)"
             if is_coll
-            else _base_or_null(cols, BASE_PREFIX + ttl_col(c), "int")
+            else _base_or_null(cols, BASE_PREFIX + ttl_col(c), "INT")
         )
         flavor = (
-            F.when(wt.isNotNull() & ttl.isNotNull(), F.lit(TIMESTAMP_TTL))
-            .when(wt.isNotNull(), F.lit(TIMESTAMP))
-            .when(ttl.isNotNull(), F.lit(TTL))
-            .otherwise(F.lit(NO_TIMESTAMP_TTL))
+            f"CASE WHEN {wt} IS NOT NULL AND {ttl} IS NOT NULL THEN '{TIMESTAMP_TTL}'"
+            f" WHEN {wt} IS NOT NULL THEN '{TIMESTAMP}'"
+            f" WHEN {ttl} IS NOT NULL THEN '{TTL}'"
+            f" ELSE '{NO_TIMESTAMP_TTL}' END"
+        )
+        changed = (
+            _changed(c, t)
+            if (BASE_PREFIX + c in cols or MV_PREFIX + c in cols)
+            else "true"
         )
         cells.append(
-            F.when(
-                _changed(c, t) if (BASE_PREFIX + c in cols or MV_PREFIX + c in cols) else F.lit(True),
-                F.struct(
-                    F.lit(c).alias("column"),
-                    F.lit(t).alias("column_type"),
-                    F.when(base_c.isNotNull(), render_value(base_c, t)).alias("value"),
-                    wt.alias("writetime"),
-                    ttl.alias("ttl"),
-                    flavor.alias("flavor"),
-                ),
-            )
+            f"CASE WHEN {changed} THEN named_struct("
+            f"'column', {sql_str(c)}, 'column_type', {sql_str(t)},"
+            f" 'value', CASE WHEN {base_c} IS NOT NULL"
+            f" THEN {render_value(base_c, t)} END,"
+            f" 'writetime', {wt}, 'ttl', {ttl}, 'flavor', {flavor}) END"
         )
 
-    exploded = cand.select(
-        *spec.mv_pk,
-        F.explode(F.array_compact(F.array(*cells))).alias("cell"),
+    pk = [ident(c) for c in spec.mv_pk]
+    exploded = cand.selectExpr(
+        *pk, f"explode(array_compact(array({', '.join(cells)}))) AS cell"
     )
-    return exploded.select(
-        *spec.mv_pk,
-        "cell.column",
-        "cell.column_type",
-        "cell.value",
-        "cell.writetime",
-        "cell.ttl",
-        "cell.flavor",
-    )
+    fields = ("`column`", "column_type", "value", "writetime", "ttl", "flavor")
+    return exploded.selectExpr(*pk, *(f"cell.{f}" for f in fields))
 
 
 def plan_upsert_errors(wide: DataFrame, spec: MVSpec) -> DataFrame:
     """Keys whose upsert the reference refuses: null MV-PK column
     (DBOperations.java:296-309) → ERR_UPSERTING report category."""
     return (
-        wide.filter(F.col("problem").isin(*_UPSERT_PROBLEMS))
+        wide.filter(problem_in(_UPSERT_PROBLEMS))
         .filter(_pk_has_null(spec))
-        .select(*spec.mv_pk, "problem")
+        .selectExpr(*map(ident, spec.mv_pk), "problem")
     )
 
 
@@ -193,11 +173,7 @@ def plan_deletes(
     the reference's per-row point lookup (isPresentInBaseTable,
     DBOperations.java:196-228).  Output: one row per MV PK to delete.
     """
-    orphans = wide.filter(F.col("problem") == MISSING_IN_BASE_TABLE).select(
-        *spec.mv_pk
-    )
-    fresh = current_base_df.select(*spec.mv_pk)
-    return orphans.join(fresh, on=spec.mv_pk, how="left_anti")
+    return _orphans(wide, spec, current_base_df, "left_anti")
 
 
 def plan_not_deleted(
@@ -208,11 +184,18 @@ def plan_not_deleted(
     """Orphans whose delete is suppressed because the key re-appeared in the
     base snapshot (DBResult.entryPresent → notDelRecords,
     MvSync.java:391-397)."""
-    orphans = wide.filter(F.col("problem") == MISSING_IN_BASE_TABLE).select(
-        *spec.mv_pk
-    )
-    fresh = current_base_df.select(*spec.mv_pk)
-    return orphans.join(fresh, on=spec.mv_pk, how="left_semi")
+    return _orphans(wide, spec, current_base_df, "left_semi")
+
+
+def _orphans(
+    wide: DataFrame, spec: MVSpec, current_base_df: DataFrame, how: str
+) -> DataFrame:
+    """MISSING_IN_BASE_TABLE keys, ``how``-joined with the PKs of a base
+    snapshot (``left_anti``: still absent; ``left_semi``: re-appeared)."""
+    pk = [ident(c) for c in spec.mv_pk]
+    orphans = wide.filter(f"problem = '{MISSING_IN_BASE_TABLE}'").selectExpr(*pk)
+    fresh = current_base_df.selectExpr(*pk)
+    return orphans.join(fresh, on=spec.mv_pk, how=how)
 
 
 def apply_repairs_file_mode(
@@ -225,7 +208,7 @@ def apply_repairs_file_mode(
     """Deterministic file-mode repair: returns the repaired MV dataset.
 
     Equivalent of running the reference with all three fix flags honored,
-    but as a pure join + per-column ``F.when`` rewrite (FIXTURES.md F5:
+    but as a pure join + per-column ``CASE WHEN`` rewrite (FIXTURES.md F5:
     "resulting MV dataset must equal the base table's projection under the
     MV schema for all in-window keys"):
 
@@ -244,30 +227,31 @@ def apply_repairs_file_mode(
 
     wide = classify(base_df, mv_df, spec, window=window)
     cols = wide.columns
-    p = F.col("problem")
-    mv_present = F.coalesce(F.col(MV_PREFIX + "present"), F.lit(False))
+    mv_present = f"coalesce({ident(MV_PREFIX + 'present')}, false)"
 
-    keep = (
-        (mv_present & p.isin(CONSISTENT, SKIPPED, INCONSISTENT))
-        | ((p == MISSING_IN_MV_TABLE) & F.lit(fix_missing))
-        | ((p == MISSING_IN_BASE_TABLE) & F.lit(not fix_orphan) & mv_present)
-    )
+    kept = [CONSISTENT, SKIPPED, INCONSISTENT]
+    if not fix_orphan:
+        kept.append(MISSING_IN_BASE_TABLE)
+    inserted = [MISSING_IN_MV_TABLE] if fix_missing else []
+    keep = f"{mv_present} AND {problem_in(kept)} OR {problem_in(inserted)}"
 
-    out_cols: list[Column] = [F.col(c) for c in spec.mv_pk]
+    out_cols = [ident(c) for c in spec.mv_pk]
     for c, t in sorted(spec.mv.non_pk.items()):
+        replaced = [INCONSISTENT] if fix_inc else []
         take_base = (
-            (p == INCONSISTENT) & F.lit(fix_inc) & _changed(c, t)
-        ) | ((p == MISSING_IN_MV_TABLE) & F.lit(fix_missing))
-        base_c = _base_or_null(cols, BASE_PREFIX + c)
-        mv_c = _base_or_null(cols, MV_PREFIX + c)
-        out_cols.append(F.when(take_base, base_c).otherwise(mv_c).alias(c))
+            f"{problem_in(replaced)} AND ({_changed(c, t)}) OR {problem_in(inserted)}"
+        )
+        names = [c]
         if t not in COLLECTION_TYPES:
-            for suffix_fn, cast in ((writetime_col, "long"), (ttl_col, "int")):
-                b = _base_or_null(cols, BASE_PREFIX + suffix_fn(c), cast)
-                m = _base_or_null(cols, MV_PREFIX + suffix_fn(c), cast)
-                out_cols.append(F.when(take_base, b).otherwise(m).alias(suffix_fn(c)))
+            names += [writetime_col(c), ttl_col(c)]
+        for name, cast in zip(names, (None, "BIGINT", "INT")):
+            b = _base_or_null(cols, BASE_PREFIX + name, cast)
+            m = _base_or_null(cols, MV_PREFIX + name, cast)
+            out_cols.append(
+                f"CASE WHEN {take_base} THEN {b} ELSE {m} END AS {ident(name)}"
+            )
 
-    return wide.filter(keep).select(*out_cols)
+    return wide.filter(keep).selectExpr(*out_cols)
 
 
 def compact_repair_log(

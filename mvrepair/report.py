@@ -25,14 +25,15 @@ import os
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from mvrepair.functions import render_value
+from mvrepair.functions import coalesce_sql, ident, render_value, sql_str
 from mvrepair.operators.reconcile import (
     BASE_PREFIX,
-    CONSISTENT,
     INCONSISTENT,
     MV_PREFIX,
-    SKIPPED,
+    PROBLEM_ROWS,
     JobStatsResult,
+    problem_in,
+    upsert_problems,
 )
 from mvrepair.schema import MVSpec, TTL_SUFFIX, WRITETIME_SUFFIX
 
@@ -42,77 +43,66 @@ SEPARATOR = "=" * 30
 ERR_DELETING = "ERR_DELETING"
 ERR_UPSERTING = "ERR_UPSERTING"
 
+# a record with its FileStreamer separator appended (FileStreamer.java:20-34)
+_SEPARATED_RECORD = f"concat(record, {sql_str(chr(10) + SEPARATOR)}) AS record"
 
-def _render_or_null(col: Column, typ: str) -> Column:
-    return F.coalesce(render_value(col, typ), F.lit("null"))
 
-
-def _row_key_expr(spec: MVSpec) -> Column:
+def _row_key_expr(spec: MVSpec) -> str:
     """RecordPrimaryKey.toString: ``name:TYPE:value,…`` over the MV PK."""
     parts = []
     for c in spec.mv_pk:
         typ = spec.mv.columns[c]
-        if parts:
-            parts.append(F.lit(","))
-        parts.append(F.lit(f"{c}:{typ}:"))
-        parts.append(_render_or_null(F.col(c), typ))
-    return F.concat(*parts)
+        label = f"{',' if parts else ''}{c}:{typ}:"
+        parts += [sql_str(label), render_value(ident(c), typ)]
+    return f"concat({', '.join(parts)})"
 
 
-def _row_render_expr(wide_cols: list[str], spec: MVSpec, prefix: str, side) -> Column:
+def _row_render_expr(wide_cols: list[str], spec: MVSpec, prefix: str, side) -> str:
     """``CassandraRow{col: val, …}`` in sorted column order; null row (side
     absent) renders as the literal ``null``."""
-    parts: list[Column] = [F.lit("CassandraRow{")]
-    first = True
+    parts: list[str] = []
+    sep = "CassandraRow{"
     for c in sorted(side.columns):
         typ = side.columns[c]
         src = c if c in spec.mv_pk else prefix + c
         if src not in wide_cols and c not in spec.mv_pk:
             continue
-        entries = [(c, _render_or_null(F.col(src), typ))]
-        if not first:
-            parts.append(F.lit(", "))
-        for name, val in entries:
-            parts.append(F.lit(f"{name}: "))
-            parts.append(val)
-        first = False
+        parts += [sql_str(f"{sep}{c}: "), render_value(ident(src), typ)]
+        sep = ", "
         for suffix, label in ((WRITETIME_SUFFIX, "writetime"), (TTL_SUFFIX, "ttl")):
             comp = (prefix + c + suffix) if c not in spec.mv_pk else None
             if comp and comp in wide_cols:
-                parts.append(F.lit(f", {label}({c}): "))
-                parts.append(F.coalesce(F.col(comp).cast("string"), F.lit("null")))
-    parts.append(F.lit("}"))
-    present = F.coalesce(F.col(prefix + "present"), F.lit(False))
-    return F.when(present, F.concat(*parts)).otherwise(F.lit("null"))
+                parts += [
+                    sql_str(f", {label}({c}): "),
+                    f"coalesce(CAST({ident(comp)} AS STRING), 'null')",
+                ]
+    parts.append(sql_str("}" if parts else sep + "}"))
+    present = f"coalesce({ident(prefix + 'present')}, false)"
+    return f"CASE WHEN {present} THEN concat({', '.join(parts)}) ELSE 'null' END"
 
 
-def _record_expr(cols: list[str], spec: MVSpec) -> Column:
+def _record_expr(cols: list[str], spec: MVSpec) -> str:
     """The full golden record text (MVInconsistentRow.toString parity)."""
-    diff_name_type = F.concat(F.col("diff_column"), F.lit(":"), F.col("diff_type"))
-    base_cell = F.when(
-        F.col("base_value").isNotNull(),
-        F.concat(diff_name_type, F.lit(":"), F.col("base_value")),
-    ).otherwise(diff_name_type)
-    mv_cell = F.when(
-        F.col("mv_value").isNotNull(),
-        F.concat(diff_name_type, F.lit(":"), F.col("mv_value")),
-    ).otherwise(diff_name_type)
+    diff_name_type = "concat(diff_column, ':', diff_type)"
 
-    return F.concat(
-        F.lit("Problem: "),
-        F.col("problem"),
-        F.lit("\nRowKey: "),
-        _row_key_expr(spec),
-        F.lit("\nMainTableEntry: "),
-        _row_render_expr(cols, spec, BASE_PREFIX, spec.base),
-        F.lit("\nMVTableEntry: "),
-        _row_render_expr(cols, spec, MV_PREFIX, spec.mv),
-        F.when(
-            (F.col("problem") == INCONSISTENT) & F.col("diff_column").isNotNull(),
-            F.concat(
-                F.lit("\nBaseColumn: "), base_cell, F.lit("\nMvColumn: "), mv_cell
-            ),
-        ).otherwise(F.lit("")),
+    def cell(value: str) -> str:
+        return (
+            f"CASE WHEN {value} IS NOT NULL"
+            f" THEN concat({diff_name_type}, ':', {value}) ELSE {diff_name_type} END"
+        )
+
+    diff_block = (
+        f"CASE WHEN problem = '{INCONSISTENT}' AND diff_column IS NOT NULL"
+        f" THEN concat({sql_str(chr(10) + 'BaseColumn: ')}, {cell('base_value')},"
+        f" {sql_str(chr(10) + 'MvColumn: ')}, {cell('mv_value')}) ELSE '' END"
+    )
+    return (
+        f"concat('Problem: ', problem,"
+        f" {sql_str(chr(10) + 'RowKey: ')}, {_row_key_expr(spec)},"
+        f" {sql_str(chr(10) + 'MainTableEntry: ')},"
+        f" {_row_render_expr(cols, spec, BASE_PREFIX, spec.base)},"
+        f" {sql_str(chr(10) + 'MVTableEntry: ')},"
+        f" {_row_render_expr(cols, spec, MV_PREFIX, spec.mv)}, {diff_block})"
     )
 
 
@@ -120,16 +110,14 @@ def format_report(wide: DataFrame, spec: MVSpec) -> DataFrame:
     """Wide classified DataFrame → (problem, record) golden-text rows for
     all problem keys (CONSISTENT/SKIPPED emit nothing)."""
     record = _record_expr(wide.columns, spec)
-    return wide.filter(~F.col("problem").isin(CONSISTENT, SKIPPED)).select(
-        F.col("problem"), record.alias("record")
-    )
+    return wide.filter(PROBLEM_ROWS).selectExpr("problem", f"{record} AS record")
 
 
-def _default_upsert_err(wide: DataFrame, spec: MVSpec, settings) -> Column:
-    """File-mode upsert failure surface: the reference refuses (and reports)
-    upserts whose MV-PK has a null column (DBOperations.java:296-309,
-    ``Primary key column %s is null``) — the one mutation error that exists
-    without a live database.
+def _default_upsert_err(spec: MVSpec, settings) -> str:
+    """File-mode upsert failure surface (SQL text): the reference refuses
+    (and reports) upserts whose MV-PK has a null column
+    (DBOperations.java:296-309, ``Primary key column %s is null``) — the
+    one mutation error that exists without a live database.
 
     When this fires: the wide frame's PK columns are using-join coalesced,
     so a null only survives when NEITHER side had a value — i.e. a
@@ -139,28 +127,35 @@ def _default_upsert_err(wide: DataFrame, spec: MVSpec, settings) -> Column:
     into the MV without a full PK).  For INCONSISTENT rows both sides
     matched on non-null keys, so — as in the reference, where Cassandra
     PKs are non-null — the check cannot fire there."""
-    from mvrepair.operators.reconcile import MISSING_IN_MV_TABLE
+    attempted = problem_in(upsert_problems(settings))
+    first_null = coalesce_sql(
+        [f"CASE WHEN {ident(c)} IS NULL THEN {sql_str(c)} END" for c in spec.mv_pk]
+    )
+    return (
+        f"CASE WHEN {attempted} AND {first_null} IS NOT NULL"
+        f" THEN concat('Primary key column ', {first_null}, ' is null') END"
+    )
 
-    p = F.col("problem")
-    attempted = ((p == INCONSISTENT) & F.lit(settings.fix_inconsistent_mv)) | (
-        (p == MISSING_IN_MV_TABLE) & F.lit(settings.fix_missing_mv)
-    )
-    first_null = F.coalesce(
-        *[F.when(F.col(c).isNull(), F.lit(c)) for c in spec.mv_pk],
-        F.lit(None).cast("string"),
-    )
-    return F.when(
-        attempted & first_null.isNotNull(),
-        F.concat(F.lit("Primary key column "), first_null, F.lit(" is null")),
-    )
+
+def _err_sql(
+    wide: DataFrame, err: str | Column | None, name: str
+) -> tuple[DataFrame, str]:
+    """An error expression as SQL text over ``wide``: text (one operand,
+    e.g. a CASE or a function call) passes through, a Column is projected
+    as a hidden ``name`` column and referenced."""
+    if err is None:
+        return wide, "CAST(NULL AS STRING)"
+    if isinstance(err, str):
+        return wide, err
+    return wide.withColumn(name, err), ident(name)
 
 
 def format_report_categorized(
     wide: DataFrame,
     spec: MVSpec,
     settings=None,
-    upsert_err: Column | None = None,
-    delete_err: Column | None = None,
+    upsert_err: str | Column | None = None,
+    delete_err: str | Column | None = None,
 ) -> DataFrame:
     """(category, record) with repair-error fan-out, in ONE scan.
 
@@ -168,46 +163,34 @@ def format_report_categorized(
     (MVJobOutputStreamer.java:64-101): every problem row goes to its
     problem category; a row whose repair mutation failed ADDITIONALLY goes
     to ERR_DELETING / ERR_UPSERTING with the error message appended.
-    ``upsert_err`` / ``delete_err`` are string expressions (null = no
-    error); the default upsert error reproduces the reference's null-PK
-    refusal.  Fan-out is an explode over a per-row category array, so the
-    classified frame is scanned once — no per-category re-scan.
+    ``upsert_err`` / ``delete_err`` are string expressions, SQL text or
+    Columns (null = no error); the default upsert error reproduces the
+    reference's null-PK refusal.  Fan-out is an explode over a per-row
+    category array, so the classified frame is scanned once — no
+    per-category re-scan.
     """
     from mvrepair.config import SyncSettings
 
     settings = settings or SyncSettings()
-    if upsert_err is None:
-        upsert_err = _default_upsert_err(wide, spec, settings)
-    if delete_err is None:
-        delete_err = F.lit(None).cast("string")
-
     record = _record_expr(wide.columns, spec)
-    p = F.col("problem")
-    targets = F.array_compact(
-        F.array(
-            F.when(
-                ~p.isin(CONSISTENT, SKIPPED),
-                F.struct(p.alias("category"), record.alias("record")),
-            ),
-            F.when(
-                delete_err.isNotNull(),
-                F.struct(
-                    F.lit(ERR_DELETING).alias("category"),
-                    F.concat(record, F.lit("\n"), delete_err).alias("record"),
-                ),
-            ),
-            F.when(
-                upsert_err.isNotNull(),
-                F.struct(
-                    F.lit(ERR_UPSERTING).alias("category"),
-                    F.concat(record, F.lit("\n"), upsert_err).alias("record"),
-                ),
-            ),
+    if upsert_err is None:
+        upsert_err = _default_upsert_err(spec, settings)
+    wide, upsert_err = _err_sql(wide, upsert_err, "__upsert_err")
+    wide, delete_err = _err_sql(wide, delete_err, "__delete_err")
+
+    def target(category: str, err: str) -> str:
+        return (
+            f"CASE WHEN {err} IS NOT NULL THEN named_struct('category', '{category}',"
+            f" 'record', concat({record}, {sql_str(chr(10))}, {err})) END"
         )
+
+    targets = (
+        f"array_compact(array(CASE WHEN {PROBLEM_ROWS}"
+        f" THEN named_struct('category', problem, 'record', {record}) END,"
+        f" {target(ERR_DELETING, delete_err)}, {target(ERR_UPSERTING, upsert_err)}))"
     )
-    return (
-        wide.select(F.explode(targets).alias("t"))
-        .select("t.category", "t.record")
+    return wide.selectExpr(f"explode({targets}) AS t").selectExpr(
+        "t.category", "t.record"
     )
 
 
@@ -216,8 +199,8 @@ def write_reports(
     spec: MVSpec,
     outdir: str,
     settings=None,
-    upsert_err: Column | None = None,
-    delete_err: Column | None = None,
+    upsert_err: str | Column | None = None,
+    delete_err: str | Column | None = None,
 ) -> None:
     """O16 multi-sink fan-out: ``<outdir>/category=<CATEGORY>/part-*.txt``
     with ``"="*30`` separators appended per record (FileStreamer parity).
@@ -229,7 +212,7 @@ def write_reports(
     stats.txt."""
     formatted = format_report_categorized(
         wide, spec, settings, upsert_err=upsert_err, delete_err=delete_err
-    ).withColumn("record", F.concat(F.col("record"), F.lit("\n" + SEPARATOR)))
+    ).selectExpr("category", _SEPARATED_RECORD)
     formatted.write.partitionBy("category").mode("overwrite").text(outdir)
 
 
@@ -270,23 +253,16 @@ def write_error_reports(
         if errors is None:
             continue
         per_key = errors.groupBy(*spec.mv_pk).agg(
-            F.array_join(
-                F.sort_array(F.collect_set("error")), "; "
-            ).alias("__err")
+            F.expr("array_join(sort_array(collect_set(error)), '; ') AS __err")
         )
-        part = (
-            wide.join(per_key, on=list(spec.mv_pk), how="inner")
-            .select(
-                F.lit(category).alias("category"),
-                F.concat(record, F.lit("\n"), F.col("__err")).alias("record"),
-            )
+        part = wide.join(per_key, on=list(spec.mv_pk), how="inner").selectExpr(
+            f"'{category}' AS category",
+            f"concat({record}, {sql_str(chr(10))}, __err) AS record",
         )
         out = part if out is None else out.unionByName(part)
     if out is None:
         return
-    formatted = out.withColumn(
-        "record", F.concat(F.col("record"), F.lit("\n" + SEPARATOR))
-    )
+    formatted = out.selectExpr("category", _SEPARATED_RECORD)
     formatted.write.partitionBy("category").mode("append").text(outdir)
 
 

@@ -6,11 +6,19 @@ Parity with ``MvSync.main``/``run()``/``buildAndRunSparkJob``
     settings → schema discovery (``MVSpec.from_catalog``) → repair-type
     validation → classify → categorized report sinks → ``stats.txt``,
 
-with the 15 JobStats counters collected via ``df.observe`` ON THE REPORT
-WRITE ACTION — one pass over the data, exactly-once per action (better
-than the reference's at-least-once accumulators under task retries,
+with the 15 JobStats counters collected via ``df.observe`` on the one
+full pass over the data — exactly-once per action (better than the
+reference's at-least-once accumulators under task retries,
 JobStats.java:26-41) — and fed into the lifecycle metrics registry
 (``JobMetrics.absorb_job_stats``, MvSyncJobMetrics.java:6-23).
+
+Classify once: the reference classifies a key and issues its repair in
+the same cogroup pass (MvSync.java:384-412).  Here, when a repair applier
+runs, the one full pass is an eager ``localCheckpoint`` of the problem
+rows, and the report write and both repair plans read that checkpoint
+instead of each re-running scan → join → classify.  Without an applier
+the report write is the only consumer, so it stays the one action and
+nothing is checkpointed.
 
 Output layout mirrors ``MVJobOutputStreamer`` (output/MVJobOutputStreamer.
 java:28-61): ``<outdir>/<CATEGORY>/part-*.txt`` — one directory per
@@ -27,8 +35,10 @@ from typing import Callable
 from pyspark.sql import DataFrame, Observation, SparkSession
 
 from mvrepair.config import SyncSettings
+from mvrepair.functions import ident
 from mvrepair.metrics import GLOBAL_METRICS, JobMetrics
 from mvrepair.operators.reconcile import (
+    PROBLEM_ROWS,
     JobStatsResult,
     classify,
     read_rows_exprs,
@@ -120,10 +130,15 @@ def run(
     ``settings.keyspace / basetablename / mvname`` via the Spark catalog
     (primary keys from the ``mvrepair.pk`` table property).
 
-    The report write is the ONE action: window filter, join, classify,
-    diff, category fan-out, and the 15 stats counters (via ``observe``)
-    all ride it.  ``stats.txt`` is then written driver-side from the
-    observed values — no second aggregation job (JobStats.java:44-76).
+    One full pass: window filter, join, classify, diff and the 15 stats
+    counters (via ``observe``) run once.  Without a repair applier that
+    pass is the report write, category fan-out included.  With one, it
+    is an eager ``localCheckpoint`` of the problem rows (non-CONSISTENT,
+    non-SKIPPED), which the report write, ``plan_upserts`` and
+    ``plan_deletes`` then read; the delete guard still reads ``base_df``
+    to re-check the snapshot.  ``stats.txt`` is then written driver-side
+    from the observed values — no second aggregation job
+    (JobStats.java:44-76).
     """
     settings = settings or SyncSettings()
     metrics = metrics if metrics is not None else GLOBAL_METRICS
@@ -153,15 +168,28 @@ def run(
         window = settings.window_micros(native_unbounded=native_unbounded_window)
         wide = classify(base_df, mv_df, spec, window=window)
 
-        # One-pass stats: both observations ride the report write action
-        # below (readRows is a second observe on the same frame — still
-        # zero extra jobs).
-        upsert_err = _default_upsert_err(wide, spec, settings)
+        # One-pass stats: both observations sit on the FULL classified
+        # frame (readRows is a second observe on the same frame), so the
+        # first action over it computes all 16 values exactly once.
+        upsert_err = _default_upsert_err(spec, settings)
         observation = Observation("job_stats")
         read_obs = Observation("read_rows")
         wide = wide.observe(
             observation, *stats_agg_exprs(settings, upsert_err=upsert_err)
         ).observe(read_obs, *read_rows_exprs())
+
+        repairing = repair_applier is not None and settings.repair_enabled
+        if repairing:
+            # Three consumers follow (the report write and both repair
+            # plans), and each would re-run scan → join → classify.  Only
+            # problem rows reach any of them, so the one full pass keeps
+            # those rows, and the counters ride it.  localCheckpoint, as
+            # on the mutation path in sources/cassandra.py: the blocks
+            # stay on the executors without a checkpoint directory, and
+            # they are lost with an executor (the run then fails rather
+            # than recomputing).  With the report as the only consumer,
+            # its write stays the one action and nothing is checkpointed.
+            wide = wide.filter(PROBLEM_ROWS).localCheckpoint(eager=True)
 
         write_reports(wide, spec, outdir, settings, upsert_err=upsert_err)
         if reference_layout:
@@ -173,7 +201,7 @@ def run(
         # 63-128): sources.cassandra.apply_repairs_cassandra for a live
         # cluster, a recorder in tests, None = detection/report-only.
         live_upsert_err = live_delete_err = 0
-        if repair_applier is not None and settings.repair_enabled:
+        if repairing:
             from mvrepair.operators.repair import plan_deletes, plan_upserts
 
             upserts = plan_upserts(wide, spec, settings, respect_flags=True)
@@ -183,7 +211,7 @@ def run(
                 # DBOperations.java:196-228)
                 deletes = plan_deletes(wide, spec, base_df)
             else:
-                deletes = wide.select(*spec.mv_pk).limit(0)
+                deletes = wide.selectExpr(*map(ident, spec.mv_pk)).limit(0)
             result = repair_applier(upserts, deletes)
             # A live applier (apply_repairs_cassandra) hands back per-key
             # error frames; route them into the ERR_UPSERTING/ERR_DELETING

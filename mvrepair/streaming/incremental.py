@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from mvrepair.functions import ident
 from mvrepair.operators.reconcile import (
     INCONSISTENT,
     MISSING_IN_MV_TABLE,
@@ -362,20 +363,22 @@ def streaming_classify_against_static(
     )
     joined = base_p.join(mv_p, on=pk, how="left")
     diff_name, diff_type, base_val, mv_val = _diff_exprs(spec)
-    mv_present = F.coalesce(F.col(MV_PREFIX + "present"), F.lit(False))
+    mv_present = f"coalesce({ident(MV_PREFIX + 'present')}, false)"
     problem = (
-        F.when(~mv_present, F.lit(MISSING_IN_MV_TABLE))
-        .when(diff_name.isNotNull(), F.lit(INCONSISTENT))
-        .otherwise(F.lit("CONSISTENT"))
+        f"CASE WHEN NOT {mv_present} THEN '{MISSING_IN_MV_TABLE}'"
+        f" WHEN {diff_name} IS NOT NULL THEN '{INCONSISTENT}'"
+        " ELSE 'CONSISTENT' END"
     )
-    return joined.withColumns(
-        {
-            "problem": problem,
-            "diff_column": F.when(mv_present, diff_name),
-            "diff_type": F.when(mv_present, diff_type),
-            "base_value": F.when(mv_present, base_val),
-            "mv_value": F.when(mv_present, mv_val),
-        }
+    diffs = {
+        "diff_column": diff_name,
+        "diff_type": diff_type,
+        "base_value": base_val,
+        "mv_value": mv_val,
+    }
+    return joined.selectExpr(
+        "*",
+        f"{problem} AS problem",
+        *[f"CASE WHEN {mv_present} THEN {e} END AS {n}" for n, e in diffs.items()],
     )
 
 

@@ -6,9 +6,12 @@ the fix: oracles with a top-level ORDER BY are compared as row
 sequences, and a deliberately shuffled ordered result FAILS the gate.
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+# the tools/ directory of the checkout this test sits in
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(_ROOT, "tools"))
 
 from check_oracle import (  # noqa: E402
     df_to_multiset,

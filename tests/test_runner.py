@@ -244,8 +244,13 @@ def test_run_invokes_repair_applier_with_plans(spark, e2e_frames, tmp_path):
     384-412 inline mutation parity; applier = the live-executor seam)."""
     base, mv = e2e_frames
     applied: dict[str, list] = {}
+    metrics = JobMetrics()
 
     def applier(upserts, deletes):
+        applied["plans"] = [
+            df._jdf.queryExecution().optimizedPlan().toString()
+            for df in (upserts, deletes)
+        ]
         applied["upserts"] = upserts.collect()
         applied["deletes"] = deletes.collect()
 
@@ -255,8 +260,22 @@ def test_run_invokes_repair_applier_with_plans(spark, e2e_frames, tmp_path):
         base_df=base,
         mv_df=mv,
         spec=_spec(),
+        metrics=metrics,
         repair_applier=applier,
     )
+    # classify once: both plans read the checkpointed problem rows, so
+    # neither re-runs the base/MV full-outer join
+    for plan in applied["plans"]:
+        assert "FullOuter" not in plan, plan
+    # ...while the counters still saw every key (an observe placed after
+    # the problem-row filter would read consistentRecords 0)
+    assert stats.render() == GOLDEN_STATS
+    m = metrics.as_dict()
+    assert m["ProcessRecord"] == 6 and m["ReadRows"] == 9
+    assert m["ConsistentRecord"] == 1 and m["InconsistentRecord"] == 1
+    assert m["MissingBaseTable"] == 1 and m["MissingMV"] == 2
+    assert m["RecordNotInScope"] == 1
+    assert m["DeleteRecord"] == 1 and m["UpsertRecord"] == 3
     # delete plan: the single MV-only orphan key B (guard passes — B is
     # absent from the same base snapshot)
     assert [tuple(r) for r in applied["deletes"]] == [(11, "NY", 1, "B")]
@@ -268,6 +287,46 @@ def test_run_invokes_repair_applier_with_plans(spark, e2e_frames, tmp_path):
     }
     assert {r.column for r in ups} == {"c2", "c3"}
     assert stats.counters["upsertAttemptedRecords"] == 3  # X counted, refused
+
+
+# py4j round trips to build classify + the categorized report + both
+# repair plans for ``_spec()`` (no action), counted as below: 4962 when
+# every expression node was its own PySpark Column call.
+_COLUMN_BUILD_ROUND_TRIPS = 4962
+
+
+def test_runner_frames_build_in_few_round_trips(spark, e2e_frames, tmp_path):
+    """The runner's frames are built from SQL text, one expression string
+    per output column, not one py4j-wrapped Column call per node."""
+    from py4j.clientserver import ClientServerConnection
+
+    from mvrepair.operators.reconcile import classify
+    from mvrepair.operators.repair import plan_deletes, plan_upserts
+    from mvrepair.report import format_report_categorized
+
+    base, mv = e2e_frames
+    spec, settings = _spec(), _settings(str(tmp_path / "out"))
+
+    def build():
+        wide = classify(base, mv, spec, window=settings.window_micros())
+        format_report_categorized(wide, spec, settings)
+        plan_upserts(wide, spec, settings, respect_flags=True)
+        plan_deletes(wide, spec, base)
+
+    build()  # warm py4j's JVM-view lookups
+    send = ClientServerConnection.send_command
+    calls = [0]
+
+    def counting(self, command, *args, **kwargs):
+        calls[0] += 1
+        return send(self, command, *args, **kwargs)
+
+    ClientServerConnection.send_command = counting
+    try:
+        build()
+    finally:
+        ClientServerConnection.send_command = send
+    assert calls[0] <= _COLUMN_BUILD_ROUND_TRIPS // 4, calls[0]
 
 
 def test_run_no_applier_is_report_only(spark, e2e_frames, tmp_path):

@@ -20,13 +20,15 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 from decimal import Decimal
 
 import duckdb
 import pyarrow as pa
 
-sys.path.insert(0, "/root/repo")
+# the repository this script sits in, not a fixed checkout path
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def canon(v):
