@@ -243,6 +243,12 @@ def run(
                 # executor-local blocks are reclaimed by Spark's
                 # ContextCleaner once these references are garbage
                 # collected.
+            # Every consumer of the problem-row checkpoint has run: free
+            # its blocks now instead of whenever a GC lets the
+            # ContextCleaner see the frame is gone.  DataFrame.unpersist
+            # does not reach them; they belong to the RDD under the
+            # frame's LogicalRDD.
+            wide._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
         stats = JobStatsResult(
             counters={k: int(v) for k, v in observation.get.items()}
